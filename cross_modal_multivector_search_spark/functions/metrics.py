@@ -53,33 +53,44 @@ def smooth_chamfer(query: np.ndarray, data: np.ndarray,
     return float((term1 + term2) / denominator)
 
 
+def _set_starts(cardinalities: np.ndarray) -> np.ndarray:
+    """Row offset of each set in a concatenated batch (``reduceat``
+    indices; every cardinality must be >= 1)."""
+    return np.concatenate(([0], np.cumsum(cardinalities)[:-1])).astype(
+        np.int64)
+
+
 def smooth_chamfer_batch(query: np.ndarray, data_concat: np.ndarray,
                          cardinalities: np.ndarray,
                          temperature: float = SMOOTH_CHAMFER_TEMPERATURE,
                          txt_scale: float = SMOOTH_CHAMFER_TXT_SCALE,
                          denominator: float = SMOOTH_CHAMFER_DENOMINATOR) -> np.ndarray:
-    """One GEMM for a whole batch of data sets, then per-set column blocks.
+    """One GEMM for a whole batch of data sets, then segment reductions.
 
     ``data_concat`` stacks the member vectors of many data sets; the i-th
     set occupies ``cardinalities[i]`` consecutive rows. Mirrors
     `ComputeSmoothChamferDistanceBatch` — one big ``query @ batch.T`` then
     block-wise LSE, which is the whole point of batching (amortized GEMM).
+    The per-(query row, set) LSE is a max/exp/sum over column segments
+    (``reduceat`` at the set offsets); the per-column LSE runs once over
+    all columns and is summed per set.
     """
+    if len(cardinalities) == 0:
+        return np.empty(0, dtype=np.float64)
     sims = query @ data_concat.T               # (m, total_rows)
     m = query.shape[0]
-    out = np.empty(len(cardinalities), dtype=np.float64)
-    offsets = np.concatenate(([0], np.cumsum(cardinalities)))
+    starts = _set_starts(cardinalities)
     ts = temperature * txt_scale
-    for i in range(len(cardinalities)):
-        blk = sims[:, offsets[i]:offsets[i + 1]]
-        t1 = ts * blk
-        rmax = t1.max(axis=1)
-        term1 = (np.log(np.exp(t1 - rmax[:, None]).sum(axis=1)) + rmax).sum() / (m * ts)
-        t2 = temperature * blk
-        cmax = t2.max(axis=0)
-        term2 = (np.log(np.exp(t2 - cmax[None, :]).sum(axis=0)) + cmax).sum() / (m * temperature)
-        out[i] = (term1 + term2) / denominator
-    return out
+    t1 = ts * sims
+    rmax = np.maximum.reduceat(t1, starts, axis=1)           # (m, sets)
+    rsum = np.add.reduceat(
+        np.exp(t1 - np.repeat(rmax, cardinalities, axis=1)), starts, axis=1)
+    term1 = (np.log(rsum) + rmax).sum(axis=0) / (m * ts)
+    t2 = temperature * sims
+    cmax = t2.max(axis=0)
+    col_lse = np.log(np.exp(t2 - cmax[None, :]).sum(axis=0)) + cmax
+    term2 = np.add.reduceat(col_lse, starts) / (m * temperature)
+    return (term1 + term2) / denominator
 
 
 def summed_max_similarity(query: np.ndarray, data: np.ndarray) -> float:
@@ -89,12 +100,14 @@ def summed_max_similarity(query: np.ndarray, data: np.ndarray) -> float:
 
 def summed_max_similarity_batch(query: np.ndarray, data_concat: np.ndarray,
                                 cardinalities: np.ndarray) -> np.ndarray:
+    """MaxSim for a batch of concatenated data sets (layout as in
+    ``smooth_chamfer_batch``): one GEMM, a per-set row max by
+    ``reduceat``, summed over query rows."""
+    if len(cardinalities) == 0:
+        return np.empty(0, dtype=np.float64)
     sims = query @ data_concat.T
-    offsets = np.concatenate(([0], np.cumsum(cardinalities)))
-    return np.array([
-        sims[:, offsets[i]:offsets[i + 1]].max(axis=1).sum()
-        for i in range(len(cardinalities))
-    ], dtype=np.float64)
+    return np.maximum.reduceat(
+        sims, _set_starts(cardinalities), axis=1).sum(axis=0)
 
 
 # Registry mirroring the reference's SetDistanceMetric dispatch

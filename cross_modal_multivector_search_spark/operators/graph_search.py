@@ -43,12 +43,38 @@ class SearchParams:
     shared_visited: bool = False  # shared visited/checked-list variant
 
 
+# the candidate schema every search engine (graph_search, hnsw, sharded)
+# emits and rerank consumes
 _CAND_SCHEMA = StructType([
     StructField("query_set_id", LongType()),
     StructField("member_pos", IntegerType()),
     StructField("base_vec_id", LongType()),
     StructField("dist", DoubleType()),
 ])
+
+
+def _cand_frame(qsids, results: list, ids: np.ndarray):
+    """One batch's candidate rows (``_CAND_SCHEMA``) as a single frame.
+
+    ``results[i]`` is query set ``qsids[i]``'s per-member list of
+    ``(local ids, dists)`` — the shape every per-batch search kernel
+    returns; ``ids`` maps local ids to base vector ids. None when the
+    batch has no members."""
+    members = [r for res in results for r in res]
+    if not members:
+        return None
+    n_members = np.array([len(res) for res in results], dtype=np.int64)
+    counts = np.array([len(c) for c, _ in members], dtype=np.int64)
+    pos = (np.arange(len(members))
+           - np.repeat(np.cumsum(n_members) - n_members, n_members))
+    return pd.DataFrame({
+        "query_set_id": np.repeat(
+            np.repeat(np.asarray(qsids, dtype=np.int64), n_members), counts),
+        "member_pos": np.repeat(pos.astype(np.int32), counts),
+        "base_vec_id": ids[np.concatenate([c for c, _ in members])
+                           .astype(np.int64)],
+        "dist": np.concatenate([d for _, d in members]).astype(np.float64),
+    })
 
 
 def _balanced_grouped(query_vecs: DataFrame, set_id: str) -> DataFrame:
@@ -78,34 +104,22 @@ def _balanced_grouped(query_vecs: DataFrame, set_id: str) -> DataFrame:
         .repartition(p, F.col("__slotkey"))
 
 
-def multivector_search(index: RoarGraphIndex, query_vecs: DataFrame,
-                       params: SearchParams = SearchParams(),
-                       set_id: str = "set_id", vec_id: str = "vec_id",
-                       vec_col: str = "vec",
-                       budget_col: str | None = None) -> DataFrame:
-    """query_vecs(set_id, vec_id, vec) -> per-member candidates
-    (query_set_id, member_pos, base_vec_id, dist).
-
-    dist is the negated inner product (reference convention). The number
-    of candidates per member equals its final beam size — budget
-    allocation decides how deep each member searched.
-
-    ``budget_col`` names an optional per-set column overriding BOTH
-    max_pq and budget for that set (the reference sweep's budget knob):
-    a whole budget sweep then runs as ONE pass instead of one search
-    job per budget.
-    """
+def _search_grouped(index, query_vecs: DataFrame, kernel,
+                    set_id: str, vec_id: str, vec_col: str,
+                    budget_col: str | None = None) -> DataFrame:
+    """The grouped search path the single-index engines share:
+    balanced grouping of the query sets, the index broadcast, one
+    ``mapInPandas`` pass and the candidate emit. ``kernel(index, sets,
+    budgets)`` searches one Arrow batch — ``sets`` the member matrices,
+    ``budgets`` the per-set ``budget_col`` values or None — and returns
+    per set its per-member ``(local ids, dists)``."""
     from ..util import cached_broadcast
 
-    spark = query_vecs.sparkSession
     # the index handle is broadcast ONCE per session (cached_broadcast —
     # repeated searches reuse the broadcast id, so neither the driver
     # re-pickles it per call nor reused workers re-unpickle it per id);
-    # the per-call search knobs ride in the tiny function closure
-    bc = cached_broadcast(spark, index)
-    min_pq, max_pq, budget = params.min_pq, params.max_pq, params.budget
-    adaptive, shared = params.adaptive, params.shared_visited
-    per_set_budget = budget_col is not None
+    # the per-call search knobs ride in the kernel closure
+    bc = cached_broadcast(query_vecs.sparkSession, index)
 
     aggs = [F.sort_array(F.collect_list(F.struct(
         F.col(vec_id).alias("vid"), F.col(vec_col).alias("v")
@@ -131,53 +145,58 @@ def multivector_search(index: RoarGraphIndex, query_vecs: DataFrame,
 
     def search_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx = bc.value
-        adj, vecs, ids, ep = idx.adj, idx.vecs, idx.ids, idx.entry_point
         for pdf in it:
-            frames = []
-            if shared:
-                # shared-visited variant keeps the per-set kernel
-                for qsid, mats in zip(pdf["query_set_id"], pdf["mats"]):
-                    q = np.stack([np.asarray(r, dtype=np.float64)
-                                  for r in mats])
-                    results = core.multivector_search_shared_visited(
-                        adj, vecs, q, ep, min_pq, max_pq, budget)
-                    for pos, (cids, cdists) in enumerate(results):
-                        frames.append(pd.DataFrame({
-                            "query_set_id": np.full(len(cids), int(qsid),
-                                                    dtype=np.int64),
-                            "member_pos": np.full(len(cids), pos,
-                                                  dtype=np.int32),
-                            "base_vec_id": ids[cids],
-                            "dist": cdists,
-                        }))
-            else:
-                # the whole Arrow batch of query sets searches in one
-                # wave-vectorized pass
-                qsids = pdf["query_set_id"].to_numpy(dtype=np.int64)
-                sets = [np.stack([np.asarray(r, dtype=np.float64)
-                                  for r in mats]) for mats in pdf["mats"]]
-                if per_set_budget:
-                    b = pdf["_budget"].to_numpy(dtype=np.int64)
-                    max_pq_eff, budget_eff = b, b
-                else:
-                    max_pq_eff, budget_eff = max_pq, budget
-                all_res = core.batch_multivector_search(
-                    adj, vecs, sets, ep, min_pq, max_pq_eff, budget_eff,
-                    adaptive)
-                for qsid, results in zip(qsids, all_res):
-                    for pos, (cids, cdists) in enumerate(results):
-                        frames.append(pd.DataFrame({
-                            "query_set_id": np.full(len(cids), int(qsid),
-                                                    dtype=np.int64),
-                            "member_pos": np.full(len(cids), pos,
-                                                  dtype=np.int32),
-                            "base_vec_id": ids[cids],
-                            "dist": cdists,
-                        }))
-            if frames:
-                yield pd.concat(frames)
+            sets = [np.stack([np.asarray(r, dtype=np.float64)
+                              for r in mats]) for mats in pdf["mats"]]
+            budgets = (pdf["_budget"].to_numpy(dtype=np.int64)
+                       if budget_col is not None else None)
+            out = _cand_frame(pdf["query_set_id"].to_numpy(dtype=np.int64),
+                              kernel(idx, sets, budgets), idx.ids)
+            if out is not None:
+                yield out
 
     return grouped.mapInPandas(search_batches, schema=_CAND_SCHEMA)
+
+
+def multivector_search(index: RoarGraphIndex, query_vecs: DataFrame,
+                       params: SearchParams = SearchParams(),
+                       set_id: str = "set_id", vec_id: str = "vec_id",
+                       vec_col: str = "vec",
+                       budget_col: str | None = None) -> DataFrame:
+    """query_vecs(set_id, vec_id, vec) -> per-member candidates
+    (query_set_id, member_pos, base_vec_id, dist).
+
+    dist is the negated inner product (reference convention). The number
+    of candidates per member equals its final beam size — budget
+    allocation decides how deep each member searched.
+
+    ``budget_col`` names an optional per-set column overriding BOTH
+    max_pq and budget for that set (the reference sweep's budget knob):
+    a whole budget sweep then runs as ONE pass instead of one search
+    job per budget. The shared-visited variant ignores it.
+    """
+    min_pq, max_pq, budget = params.min_pq, params.max_pq, params.budget
+    adaptive = params.adaptive
+
+    if params.shared_visited:
+        # the shared-visited variant keeps its per-set kernel
+        def kernel(idx, sets, _budgets):
+            return [core.multivector_search_shared_visited(
+                idx.adj, idx.vecs, q, idx.entry_point, min_pq, max_pq,
+                budget) for q in sets]
+    else:
+        # the whole Arrow batch of query sets searches in one
+        # wave-vectorized pass
+        def kernel(idx, sets, budgets):
+            max_pq_eff, budget_eff = ((budgets, budgets)
+                                      if budgets is not None
+                                      else (max_pq, budget))
+            return core.batch_multivector_search(
+                idx.adj, idx.vecs, sets, idx.entry_point, min_pq,
+                max_pq_eff, budget_eff, adaptive)
+
+    return _search_grouped(index, query_vecs, kernel, set_id, vec_id,
+                           vec_col, budget_col)
 
 
 def search_and_rerank(index: RoarGraphIndex, query_vecs: DataFrame,

@@ -43,23 +43,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                               LongType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, IntegerType, LongType,
+                               StructField, StructType)
 
 from . import _roar_core as core
+from .graph_search import _CAND_SCHEMA, _cand_frame, _search_grouped
+from .set_search import fetch_grouped_sets
 
 _LEVEL_GRAPH_SCHEMA = StructType([
     StructField("level", IntegerType()),
     StructField("src", LongType()),
     StructField("nbrs", ArrayType(LongType())),
     StructField("is_entry", IntegerType()),
-])
-
-_CAND_SCHEMA = StructType([
-    StructField("query_set_id", LongType()),
-    StructField("member_pos", IntegerType()),
-    StructField("base_vec_id", LongType()),
-    StructField("dist", DoubleType()),
 ])
 
 
@@ -345,6 +340,16 @@ def search_knn_local(index: HnswIndex, q: np.ndarray, ef: int, k: int):
     return ids[:k], dists[:k]
 
 
+def _fixed_split_search(index: HnswIndex, sets: list, budget: int) -> list:
+    """Per query set, per member: `searchKnn(q_j, budget / m)`. Returns
+    per set its per-member (local ids, dists)."""
+    out = []
+    for q in sets:
+        ef = max(1, budget // len(q))
+        out.append([search_knn_local(index, row, ef, ef) for row in q])
+    return out
+
+
 def multivector_search_hnsw(index: HnswIndex, query_vecs: DataFrame,
                             budget: int, set_id: str = "set_id",
                             vec_id: str = "vec_id",
@@ -353,55 +358,14 @@ def multivector_search_hnsw(index: HnswIndex, query_vecs: DataFrame,
     search_rerank_hnsw.cpp:143-151`): per member vector j of each query
     set, `searchKnn(q_j, budget / m)` — a FIXED per-member split of the
     beam budget (this is precisely what RoarGraph's adaptive allocation
-    improves on). Emits the same candidate schema as
-    `graph_search.multivector_search`, so the same rerank applies."""
-    from ..util import cached_broadcast
-
-    spark = query_vecs.sparkSession
-    # index broadcast once per session (see graph_search); budget rides
-    # in the closure
-    bc = cached_broadcast(spark, index)
-
-    # balanced keyed repartition BEFORE the groupBy (see
-    # graph_search._balanced_grouped): the aggregation reuses the
-    # explicit partitioning, so the CPU-heavy search stage runs at
-    # cluster parallelism with zero extra exchanges, and small query
-    # batches spread one-set-per-partition instead of hash-colliding
-    # (AQE's byte-based coalescing would otherwise serialize the
-    # byte-tiny grouped rows)
-    from .graph_search import _balanced_grouped
-    grouped = (_balanced_grouped(query_vecs, set_id)
-               .groupBy(F.col(set_id).alias("query_set_id"),
-                        F.col("__slotkey"))
-               .agg(F.sort_array(F.collect_list(F.struct(
-                   F.col(vec_id).alias("vid"),
-                   F.col(vec_col).alias("v")))).alias("members"))
-               .select("query_set_id",
-                       F.col("members.v").alias("mats")))
-
-    def search_batches(it: Iterator[pd.DataFrame]) \
-            -> Iterator[pd.DataFrame]:
-        idx = bc.value
-        ids, bud = idx.ids, budget
-        for pdf in it:
-            frames = []
-            for qsid, mats in zip(pdf["query_set_id"], pdf["mats"]):
-                mvecs = [np.asarray(r, dtype=np.float64) for r in mats]
-                ef = max(1, bud // len(mvecs))
-                for pos, q in enumerate(mvecs):
-                    cids, cdists = search_knn_local(idx, q, ef, ef)
-                    frames.append(pd.DataFrame({
-                        "query_set_id": np.full(len(cids), int(qsid),
-                                                dtype=np.int64),
-                        "member_pos": np.full(len(cids), pos,
-                                              dtype=np.int32),
-                        "base_vec_id": ids[cids],
-                        "dist": cdists,
-                    }))
-            if frames:
-                yield pd.concat(frames)
-
-    return grouped.mapInPandas(search_batches, schema=_CAND_SCHEMA)
+    improves on). Runs through the same grouped search path as
+    `graph_search.multivector_search` (balanced grouping, index
+    broadcast once per session, same candidate schema), so the same
+    rerank applies."""
+    return _search_grouped(
+        index, query_vecs,
+        lambda idx, sets, _budgets: _fixed_split_search(idx, sets, budget),
+        set_id, vec_id, vec_col)
 
 
 def search_and_rerank_hnsw(index: HnswIndex, query_vecs: DataFrame,
@@ -845,14 +809,7 @@ def search_hnsw_sharded(work: DataFrame, query_vecs: DataFrame,
     multi-index analog of `searchKnn` + result heap union). Candidates
     feed the same reranker."""
     spark = query_vecs.sparkSession
-    q_pdf = (query_vecs.groupBy(F.col(set_id).alias("qsid"))
-             .agg(F.sort_array(F.collect_list(F.struct(
-                 F.col(vec_id).alias("o"), F.col(vec_col).alias("v"))))
-                 .alias("rows"))
-             .select("qsid", F.col("rows.v").alias("mats")).toPandas())
-    q_sets = [(int(s), np.array([np.asarray(v) for v in m],
-                                dtype=np.float64))
-              for s, m in zip(q_pdf["qsid"], q_pdf["mats"])]
+    q_sets = fetch_grouped_sets(query_vecs, set_id, vec_id, vec_col)
     bc_q = spark.sparkContext.broadcast((q_sets, budget))
 
     blocked = "_qblock" in work.columns
@@ -879,25 +836,13 @@ def search_hnsw_sharded(work: DataFrame, query_vecs: DataFrame,
                 ix, len(ids))
             idx = HnswIndex(ids=ids, vecs=vecs, levels=levels, adj=adj,
                             entry_point=entry, max_level=max_level)
-            frames = []
             blk, nblk = blk_state
-            for qsid, qmat in q_sets_l:
-                if qsid % nblk != blk:
-                    continue
-                ef = max(1, budget_l // len(qmat))
-                for pos in range(len(qmat)):
-                    cids, cdists = search_knn_local(
-                        idx, np.asarray(qmat[pos], dtype=np.float64),
-                        ef, ef)
-                    frames.append(pd.DataFrame({
-                        "query_set_id": np.full(len(cids), qsid,
-                                                dtype=np.int64),
-                        "member_pos": np.full(len(cids), pos,
-                                              dtype=np.int32),
-                        "base_vec_id": ids[cids],
-                        "dist": cdists,
-                    }))
-            return pd.concat(frames) if frames else None
+            sel = [(qsid, qmat) for qsid, qmat in q_sets_l
+                   if qsid % nblk == blk]
+            return _cand_frame(
+                [qsid for qsid, _ in sel],
+                _fixed_split_search(idx, [qmat for _, qmat in sel],
+                                    budget_l), ids)
 
         for pdf in it:
             qbs = pdf["_qblock"] if blocked else np.zeros(len(pdf),

@@ -5,22 +5,32 @@ Reference: `MultiVectorReranker::Rerank`
   1. candidate member-vector ids -> vector-SET ids (fixed m: vsid = vid/m,
      `tests/test_search_multivector_rerank.cpp:241-244`; variable
      cardinality via the mapping table — see operators/mapping.py);
-  2. sort+unique (here: dropDuplicates);
+  2. sort+unique (here: collect_set per data set);
   3. gather each candidate set's member vectors (a join, not a pointer
      gather);
   4. set-to-set score vs the query set; 5. top-k by descending score.
 
-The scoring reuses set_search's SQL-native scorers restricted to the
-candidate pairs (a join pre-filter instead of a full cross product) —
-the same "score only candidates" semantics as the reference.
+Scoring is the batched kernel ``set_topk_gemm`` uses
+(``functions.metrics.SET_METRICS_BATCH``) restricted to the candidate
+pairs: per Arrow batch of gathered data sets, each query set is scored
+against all of its candidate sets in that batch with one GEMM and
+segment LSE — the reference's `ComputeSmoothChamferDistanceBatch`
+shape. The declarative SQL scorers in ``set_search`` stay the oracle
+twin of the same math.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .set_search import maxsim_scores_sql, smooth_chamfer_scores_sql
+from ..functions import metrics as M
+from .set_search import (_SCORE_SCHEMA, _broadcast_query_sets,
+                         _grouped_sets)
 from .topk import grouped_topk
 
 
@@ -62,120 +72,70 @@ def rerank(candidates: DataFrame, query_vecs: DataFrame,
            data_vecs: DataFrame, k: int,
            metric: str = "smooth_chamfer", m: int | None = None,
            mapping: DataFrame | None = None,
-           impl: str = "gemm",
            q_sets: list | None = None) -> DataFrame:
     """candidates(query_set_id, base_vec_id) -> top-k reranked sets.
 
-    impl="sql": scoring via the declarative LSE aggregation (restricted
-    to candidate pairs) — the Catalyst-visible / oracle-twin plan.
-    impl="gemm": one shuffle — candidates grouped by data set with their
-    proposing query sets, one NumPy kernel call per (data set, query set)
-    against broadcast query matrices, then window top-k. Identical
-    scores; ~3 stages instead of ~10.
+    One shuffle: candidates grouped by data set with their proposing
+    query sets, joined to the grouped data sets; each Arrow batch then
+    makes one ``SET_METRICS_BATCH[metric]`` call per query set against
+    broadcast query matrices, and a window top-k finishes.
 
     ``q_sets``: optional pre-fetched ``set_search.fetch_grouped_sets``
     list of the SAME query side — build-once / search-many callers (the
     reference loads its query fbin once and benchmarks search alone)
     skip the 2-3 Spark jobs of the per-call grouped Arrow fetch, the
-    same contract ``set_topk_gemm`` already offers. gemm path only.
+    same contract ``set_topk_gemm`` already offers.
     """
-    # dedup=False: BOTH scoring paths dedup inherently (the gemm path's
-    # collect_set per data set; the sql path's semi join), so the
-    # dropDuplicates exchange re-shuffled the same candidate stream for
-    # nothing — removing it drops one full shuffle per rerank (r15)
+    if metric not in M.SET_METRICS_BATCH:
+        raise ValueError(f"unknown metric {metric!r}")
+    # dedup=False: the collect_set per data set dedups inherently, so a
+    # dropDuplicates exchange would re-shuffle the same candidate stream
+    # for nothing (r15)
     cand_sets = candidates_to_sets(candidates, m=m, mapping=mapping,
                                    dedup=False)
-    if impl == "gemm":
-        return _rerank_gemm(cand_sets, query_vecs, data_vecs, k, metric,
-                            q_sets=q_sets)
-    # Restrict the data side to candidate sets before scoring: a semi-join
-    # prunes the expensive GEMM/LSE to the candidate universe.
-    cand_data_ids = cand_sets.select(
-        F.col("data_set_id").alias("set_id")).distinct()
-    data_subset = data_vecs.join(F.broadcast(cand_data_ids), "set_id", "semi")
-    scorer = {"smooth_chamfer": smooth_chamfer_scores_sql,
-              "summed_max_similarity": maxsim_scores_sql}[metric]
-    scores = scorer(query_vecs, data_subset)
-    # Keep only (query, candidate-set) pairs that were actually proposed.
-    scoped = scores.join(
-        cand_sets,
-        (scores.q_set == cand_sets.query_set_id)
-        & (scores.d_set == cand_sets.data_set_id),
-        "semi")
-    return grouped_topk(
-        scoped, ["q_set"], [F.col("score").desc(), F.col("d_set").asc()], k
-    ).select(F.col("q_set").alias("query_set_id"), "rank",
-             F.col("d_set").alias("data_set_id"), "score")
-
-
-def _rerank_gemm(cand_sets: DataFrame, query_vecs: DataFrame,
-                 data_vecs: DataFrame, k: int, metric: str,
-                 q_sets: list | None = None) -> DataFrame:
-    """Candidate-pruned NumPy scoring (`MultiVectorReranker::Rerank`'s
-    gather+GEMM, distributed over data sets)."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    from ..functions import metrics as M
-
-    from ..util import cached_broadcast
-
-    spark = query_vecs.sparkSession
-    if q_sets is not None:
-        # pre-fetched (set_id, matrix) list: identical content to the
-        # grouped fetch below (same grouping, same vec_id member order).
-        # The cached list broadcasts once per session; workers build the
-        # lookup dict from it (cheap, once per task at most).
-        bc = cached_broadcast(spark, q_sets)
-    else:
-        q_pdf = (query_vecs.groupBy("set_id")
-                 .agg(F.sort_array(F.collect_list(F.struct(
-                     F.col("vec_id").alias("o"), F.col("vec").alias("v"))))
-                     .alias("rows"))
-                 .select("set_id", F.col("rows.v").alias("mat")).toPandas())
-        q_mats = {int(s): np.array([np.asarray(v) for v in m],
-                                   dtype=np.float64)
-                  for s, m in zip(q_pdf["set_id"], q_pdf["mat"])}
-        bc = spark.sparkContext.broadcast(q_mats)
+    bc = _broadcast_query_sets(query_vecs.sparkSession,
+                               query_vecs if q_sets is None else q_sets)
 
     # one shuffle: each candidate data set carries its proposing queries
     per_data = (cand_sets.groupBy("data_set_id")
                 .agg(F.collect_set("query_set_id").alias("qsids")))
-    data_grouped = (data_vecs.groupBy(F.col("set_id").alias("data_set_id"))
-                    .agg(F.sort_array(F.collect_list(F.struct(
-                        F.col("vec_id").alias("o"),
-                        F.col("vec").alias("v")))).alias("rows"))
-                    .select("data_set_id", F.col("rows.v").alias("mat")))
+    data_grouped = _grouped_sets(data_vecs, "set_id", None, "vec").select(
+        F.col("set_id").alias("data_set_id"), "mat")
     work = per_data.join(data_grouped, "data_set_id")
 
-    schema = StructType([
-        StructField("query_set_id", LongType()),
-        StructField("data_set_id", LongType()),
-        StructField("score", DoubleType()),
-    ])
-
     def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        val = bc.value
-        q_mats_l = ({int(s): np.asarray(m, dtype=np.float64)
-                     for s, m in val} if isinstance(val, list) else val)
-        fn = M.SET_METRICS[metric]
+        q_mats = dict(bc.value)
+        fn = M.SET_METRICS_BATCH[metric]
         for pdf in it:
-            out_q, out_d, out_s = [], [], []
-            for dsid, qsids, mat in zip(pdf["data_set_id"], pdf["qsids"],
-                                        pdf["mat"]):
-                d = np.stack([np.asarray(r, dtype=np.float64) for r in mat])
-                for qsid in qsids:
-                    out_q.append(int(qsid))
-                    out_d.append(int(dsid))
-                    out_s.append(fn(q_mats_l[int(qsid)], d))
-            yield pd.DataFrame({"query_set_id": out_q,
-                                "data_set_id": out_d, "score": out_s})
+            if not len(pdf):
+                continue
+            mats = [np.stack([np.asarray(r, dtype=np.float64) for r in mat])
+                    for mat in pdf["mat"]]
+            cards = np.array([len(x) for x in mats], dtype=np.int64)
+            starts = np.cumsum(cards) - cards
+            concat = np.vstack(mats)
+            # (query set, batch row) pairs, sorted by query set
+            n_q = np.array([len(q) for q in pdf["qsids"]], dtype=np.int64)
+            qs = np.concatenate(pdf["qsids"].to_numpy()).astype(np.int64)
+            rows = np.repeat(np.arange(len(pdf)), n_q)
+            order = np.lexsort((rows, qs))
+            qs, rows = qs[order], rows[order]
+            cuts = [0, *(np.flatnonzero(qs[1:] != qs[:-1]) + 1), len(qs)]
+            scores = np.empty(len(qs), dtype=np.float64)
+            for s, e in zip(cuts[:-1], cuts[1:]):
+                # member rows of this query set's candidate sets
+                c = cards[rows[s:e]]
+                members = (np.arange(c.sum())
+                           + np.repeat(starts[rows[s:e]] - np.cumsum(c) + c,
+                                       c))
+                scores[s:e] = fn(q_mats[int(qs[s])], concat[members], c)
+            yield pd.DataFrame({
+                "query_set_id": qs,
+                "data_set_id": pdf["data_set_id"].to_numpy(
+                    dtype=np.int64)[rows],
+                "score": scores})
 
-    scored = work.mapInPandas(score, schema=schema)
+    scored = work.mapInPandas(score, schema=_SCORE_SCHEMA)
     return grouped_topk(
         scored, ["query_set_id"],
         [F.col("score").desc(), F.col("data_set_id").asc()], k

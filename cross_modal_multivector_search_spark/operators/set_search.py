@@ -19,6 +19,12 @@ Physical strategies:
     sets streamed via ``applyInPandas``-free mapInPandas over pre-grouped
     set rows; one GEMM per Arrow batch of data sets (the reference's
     batch variant `:377-430`), per-batch partial top-k, global merge.
+
+The NumPy scoring has one kernel per metric,
+``functions.metrics.SET_METRICS_BATCH``; ``rerank`` runs the same
+kernel restricted to candidate pairs, and both take their query side
+from ``fetch_grouped_sets``. The per-pair ``SET_METRICS`` remain the
+reference the tests compare the batched kernels against.
 """
 
 from __future__ import annotations
@@ -34,6 +40,13 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from ..functions import metrics as M
 from ..functions import vector as V
 from .topk import grouped_topk
+
+# the per-pair score rows of the NumPy scorers (set_topk_gemm, rerank)
+_SCORE_SCHEMA = StructType([
+    StructField("query_set_id", LongType()),
+    StructField("data_set_id", LongType()),
+    StructField("score", DoubleType()),
+])
 
 
 def _member_pairs(query_vecs: DataFrame, data_vecs: DataFrame,
@@ -105,12 +118,16 @@ def set_topk_sql(query_vecs: DataFrame, data_vecs: DataFrame, k: int,
 
 def _grouped_sets(vec_df: DataFrame, set_id: str, pos: str | None,
                   vec_col: str) -> DataFrame:
-    """(set_id, mat: array<array<double>>) with deterministic member order."""
+    """(set_id, mat: array<array<...>>) with deterministic member order.
+
+    Vectors keep their stored element type through the shuffle (a
+    float column moves half the bytes of its double cast); the NumPy
+    consumers widen to float64 exactly."""
     order_col = F.col(pos) if pos else F.col("vec_id")
     return (
         vec_df.groupBy(F.col(set_id).alias("set_id"))
         .agg(F.sort_array(F.collect_list(F.struct(
-            order_col.alias("o"), V.to_double(F.col(vec_col)).alias("v")
+            order_col.alias("o"), F.col(vec_col).alias("v")
         ))).alias("rows"))
         .select("set_id", F.col("rows.v").alias("mat"))
     )
@@ -121,13 +138,29 @@ def fetch_grouped_sets(query_vecs: DataFrame, set_id: str = "set_id",
                        vec_col: str = "vec") -> list:
     """Arrow-fetch the (small) query side once: [(set_id, matrix), ...].
 
+    Every engine that broadcasts its query sets (``set_topk_gemm``,
+    ``rerank``, the sharded searches) fetches them through here.
     Build-once / search-many callers pass the result straight to
-    ``set_topk_gemm`` instead of a DataFrame, skipping the grouped
-    fetch's 2-3 Spark jobs on every repeated search (the reference
-    loads its query fbin once and benchmarks search alone)."""
+    ``set_topk_gemm``, ``rerank`` or ``sharded.search_sharded`` instead
+    of a DataFrame, skipping the grouped fetch's 2-3 Spark jobs on every
+    repeated search (the reference loads its query fbin once and
+    benchmarks search alone)."""
     q_pdf = _grouped_sets(query_vecs, set_id, pos, vec_col).toPandas()
-    return [(s, np.array([np.asarray(v) for v in m], dtype=np.float64))
+    return [(int(s), np.array([np.asarray(v) for v in m], dtype=np.float64))
             for s, m in zip(q_pdf["set_id"], q_pdf["mat"])]
+
+
+def _broadcast_query_sets(spark, query_vecs, set_id: str = "set_id",
+                          pos: str | None = None, vec_col: str = "vec"):
+    """Broadcast the query side in ``fetch_grouped_sets`` list form. A
+    pre-fetched (build-once) list broadcasts once per session; a
+    DataFrame is fetched and broadcast per call."""
+    from ..util import cached_broadcast
+
+    if isinstance(query_vecs, list):
+        return cached_broadcast(spark, query_vecs)
+    return spark.sparkContext.broadcast(
+        fetch_grouped_sets(query_vecs, set_id, pos, vec_col))
 
 
 def set_topk_gemm(query_vecs, data_vecs: DataFrame, k: int,
@@ -146,23 +179,9 @@ def set_topk_gemm(query_vecs, data_vecs: DataFrame, k: int,
     """
     if metric not in M.SET_METRICS_BATCH:
         raise ValueError(f"unknown metric {metric!r}")
-    from ..util import cached_broadcast
-
-    if isinstance(query_vecs, list):
-        q_sets = query_vecs
-    else:
-        q_sets = fetch_grouped_sets(query_vecs, set_id, pos, vec_col)
-    spark = data_vecs.sparkSession
-    # a pre-fetched (build-once) query list broadcasts once per session;
     # metric/k ride in the closure
-    bc = (cached_broadcast(spark, q_sets) if isinstance(query_vecs, list)
-          else spark.sparkContext.broadcast(q_sets))
-
-    schema = StructType([
-        StructField("query_set_id", LongType()),
-        StructField("data_set_id", LongType()),
-        StructField("score", DoubleType()),
-    ])
+    bc = _broadcast_query_sets(data_vecs.sparkSession, query_vecs, set_id,
+                               pos, vec_col)
 
     def score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_sets_l, met, kk = bc.value, metric, k
@@ -189,7 +208,7 @@ def set_topk_gemm(query_vecs, data_vecs: DataFrame, k: int,
                 yield pd.concat(frames)
 
     partials = _grouped_sets(data_vecs, set_id, pos, vec_col).mapInPandas(
-        score_batches, schema=schema)
+        score_batches, schema=_SCORE_SCHEMA)
     return grouped_topk(
         partials, ["query_set_id"],
         [F.col("score").desc(), F.col("data_set_id").asc()], k,

@@ -35,6 +35,8 @@ from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
 
 from . import _roar_core as core
 from .graph_build import RoarGraphParams
+from .graph_search import _CAND_SCHEMA, _cand_frame
+from .set_search import fetch_grouped_sets
 from .topk import grouped_topk
 
 _SHARD_GRAPH_SCHEMA = StructType([
@@ -339,14 +341,6 @@ def build_sharded(base: DataFrame, n_shards: int,
             .mapInPandas(build, schema=_SHARD_GRAPH_SCHEMA))
 
 
-_CAND_SCHEMA = StructType([
-    StructField("query_set_id", LongType()),
-    StructField("member_pos", IntegerType()),
-    StructField("base_vec_id", LongType()),
-    StructField("dist", DoubleType()),
-])
-
-
 def default_query_blocks(spark, n_shards: int) -> int:
     """Sub-partitions per shard so the search fan-out fills the
     cluster: ceil(parallelism / n_shards), 1 when shards alone already
@@ -437,18 +431,10 @@ def search_sharded(shard_graph: DataFrame, base: DataFrame,
     work layout itself (the ``_qblock`` column), so it can never
     disagree with how the work table was built."""
     spark = base.sparkSession
-    if isinstance(query_vecs, list):
-        q_sets = [(int(s), np.asarray(m, dtype=np.float64))
-                  for s, m in query_vecs]
-    else:
-        q_pdf = (query_vecs.groupBy(F.col(set_id).alias("qsid"))
-                 .agg(F.sort_array(F.collect_list(F.struct(
-                     F.col(vec_id).alias("o"), F.col(vec_col).alias("v"))))
-                     .alias("rows"))
-                 .select("qsid", F.col("rows.v").alias("mats")).toPandas())
-        q_sets = [(int(s), np.array([np.asarray(v) for v in m],
-                                    dtype=np.float64))
-                  for s, m in zip(q_pdf["qsid"], q_pdf["mats"])]
+    if not isinstance(query_vecs, list):
+        query_vecs = fetch_grouped_sets(query_vecs, set_id, vec_id, vec_col)
+    q_sets = [(int(s), np.asarray(m, dtype=np.float64))
+              for s, m in query_vecs]
     if routes is not None:
         # a set missing from routes would silently search NO shard and
         # return zero rows — fail loudly instead (stale/filtered routes)
@@ -532,24 +518,13 @@ def search_sharded(shard_graph: DataFrame, base: DataFrame,
             eps = np.flatnonzero(
                 pdf["is_entry"].to_numpy()[order].astype(np.int64))
             ep = int(eps[0]) if len(eps) else 0
-            frames = []
             # every routed query set searches this shard in one
             # wave-vectorized pass (exact twin of the per-set loop,
             # pinned by tests)
             all_res = core.batch_multivector_search(
                 adj, vecs, [qmat for _, qmat in sel], ep,
                 min_pq_l, max_pq_l, budget_l, adaptive_l)
-            for (qsid, _), res in zip(sel, all_res):
-                for pos, (cids, cdists) in enumerate(res):
-                    frames.append(pd.DataFrame({
-                        "query_set_id": np.full(len(cids), qsid,
-                                                dtype=np.int64),
-                        "member_pos": np.full(len(cids), pos,
-                                              dtype=np.int32),
-                        "base_vec_id": ids[cids],
-                        "dist": cdists,
-                    }))
-            return pd.concat(frames) if frames else None
+            return _cand_frame([qsid for qsid, _ in sel], all_res, ids)
 
         for pdf in it:
             if not len(pdf):
@@ -576,9 +551,9 @@ def search_sharded(shard_graph: DataFrame, base: DataFrame,
             yield out
 
     partials = work.mapInPandas(search, schema=_CAND_SCHEMA)
-    # global partial+final top-k: keep each member's best budget/|shards|
-    # …actually keep per-member best `max_pq` overall — the rerank stage
-    # dedups anyway, so this merge only bounds shuffle volume.
+    # global partial+final top-k: keep each member's best `max_pq`
+    # overall — the rerank stage dedups anyway, so this merge only
+    # bounds shuffle volume.
     return grouped_topk(
         partials, ["query_set_id", "member_pos"],
         [F.col("dist").asc(), F.col("base_vec_id").asc()], max_pq
@@ -836,21 +811,10 @@ def search_sharded_query_partitioned(
         if loaded is None:                       # empty spatial cell
             return None
         ids, adj, vecs, ep = loaded
-        frames = []
         all_res = core.batch_multivector_search(
             adj, vecs, [qmat for _, qmat in sel], ep,
             min_pq, max_pq, budget, adaptive)
-        for (qsid, _), res in zip(sel, all_res):
-            for pos, (cids, cdists) in enumerate(res):
-                frames.append(pd.DataFrame({
-                    "query_set_id": np.full(len(cids), qsid,
-                                            dtype=np.int64),
-                    "member_pos": np.full(len(cids), pos,
-                                          dtype=np.int32),
-                    "base_vec_id": ids[cids],
-                    "dist": cdists,
-                }))
-        return pd.concat(frames) if frames else None
+        return _cand_frame([qsid for qsid, _ in sel], all_res, ids)
 
     def search(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # one shard per partition (bijective layout below); stream and

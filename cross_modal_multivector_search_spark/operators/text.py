@@ -227,15 +227,18 @@ def bm25_rank(docs: DataFrame, terms: list[str], k: int = 20,
     orderBy().limit(k) so Catalyst plans TakeOrderedAndProject — a
     distributed per-partition partial top-k — instead of sorting every
     matching document in one WindowExec task (for a common query term
-    that is a large fraction of the corpus)."""
+    that is a large fraction of the corpus).
+
+    ``id_col`` must be non-null (it is the documents table's key).
+    Documents with a null id are dropped before anything is computed,
+    so they count toward neither N, avgdl nor df, and are never
+    returned."""
     # the scored join infers isnotnull(doc_id) into ITS copies of the
     # tf/dl subtrees but not into df's/stats' copies, which makes the
     # otherwise-identical subtrees canonically different — every
     # consumer then re-runs the full token aggregation (r16 sf1.0 plan
     # audit: two duplicated token exchanges). Filtering the input once
-    # puts the same isnotnull below every copy. No-op semantically:
-    # doc_id is the documents table's key (never null); a hypothetical
-    # null-id doc would already be unscorable (dropped by the join).
+    # puts the same isnotnull below every copy.
     docs = docs.filter(F.col(id_col).isNotNull())
     t = tokens(docs, id_col, text_col)
     tf_all = t.groupBy(id_col, "token").agg(F.count("*").alias("tf"))

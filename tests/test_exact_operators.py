@@ -71,16 +71,19 @@ def test_set_topk_self_is_rank1(vecs):
     assert (r1.query_set_id == r1.data_set_id).all()
 
 
-def test_rerank_recovers_exact_topk_when_candidates_cover(vecs):
+@pytest.mark.parametrize("metric", ["smooth_chamfer",
+                                    "summed_max_similarity"])
+def test_rerank_recovers_exact_topk_when_candidates_cover(vecs, metric):
     """With full coverage candidates, rerank == exhaustive set top-k."""
     q = vecs.filter(F.col("set_id") < 3)
-    exact = set_search.set_topk_sql(q, vecs, 5).toPandas()
+    exact = set_search.set_topk_sql(q, vecs, 5, metric=metric).toPandas()
     cands = (
         q.select(F.col("set_id").alias("query_set_id"))
         .distinct()
         .crossJoin(vecs.select(F.col("vec_id").alias("base_vec_id")))
     )
-    rr = rerank.rerank(cands, q, vecs, 5, m=TD.M_FIXED).toPandas()
+    rr = rerank.rerank(cands, q, vecs, 5, metric=metric,
+                       m=TD.M_FIXED).toPandas()
     key = ["query_set_id", "rank"]
     pd.testing.assert_frame_equal(
         exact.sort_values(key).reset_index(drop=True),

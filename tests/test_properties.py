@@ -5,6 +5,7 @@ invariants the distributed operators rely on.
 """
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -44,18 +45,24 @@ def test_beam_queue_is_bounded_sorted_dedup(case):
     assert len(got) <= cap
 
 
+@pytest.mark.parametrize("metric", sorted(M.SET_METRICS_BATCH))
 @given(st.integers(2, 8), st.integers(1, 10), st.integers(4, 16),
        st.integers(0, 2 ** 31))
 @settings(max_examples=50, deadline=None)
-def test_chamfer_batch_equals_singles(m, n_sets, dim, seed):
+def test_chamfer_batch_equals_singles(metric, m, n_sets, dim, seed):
+    """Each batched kernel (segment reductions over set offsets) equals
+    its per-pair twin — including single-set batches and sets of one
+    vector, the ``reduceat`` edge cases."""
     rng = np.random.default_rng(seed)
     q = M.normalize_rows(rng.normal(size=(m, dim)))
     cards = rng.integers(1, 6, size=n_sets)
     data = M.normalize_rows(rng.normal(size=(int(cards.sum()), dim)))
-    batch = M.smooth_chamfer_batch(q, data, cards)
+    batch = M.SET_METRICS_BATCH[metric](q, data, cards)
+    single = M.SET_METRICS[metric]
+    assert batch.shape == (n_sets,)
     off = 0
     for i, c in enumerate(cards):
-        assert abs(batch[i] - M.smooth_chamfer(q, data[off:off + c])) < 1e-9
+        assert abs(batch[i] - single(q, data[off:off + c])) < 1e-9
         off += c
 
 

@@ -86,6 +86,21 @@ def test_sharded_search_recall(spark, shard_graph):
     assert mr >= 0.95, f"sharded recall {mr}"
 
 
+def test_search_sharded_prefetched_queries_equivalent(spark, shard_graph):
+    """The pre-fetched ``fetch_grouped_sets`` list form of the query side
+    returns the same candidate rows as the DataFrame form."""
+    vecs = TD.embeddings_norm(spark, SF_SMOKE)
+    queries = vecs.filter(F.col("set_id") < 10)
+    base = vecs.select("vec_id", "vec")
+    kw = dict(min_pq=5, max_pq=100, budget=100, n_shards=N_SHARDS)
+    a = sharded.search_sharded(shard_graph, base, queries, **kw)
+    b = sharded.search_sharded(
+        shard_graph, base, set_search.fetch_grouped_sets(queries), **kw)
+    ra = sorted(tuple(r) for r in a.collect())
+    rb = sorted(tuple(r) for r in b.collect())
+    assert ra and ra == rb
+
+
 def test_shard_self_knn_single_pass_matches_per_shard_exact(spark):
     """The single-pass shape (one scan -> repartition by shard ->
     in-task blocked self-GEMM) must equal the per-shard exact kNN
