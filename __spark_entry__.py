@@ -667,8 +667,7 @@ def q_ann_multivector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -687,8 +686,7 @@ def q_ann_window_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=600, budget=600), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=600, budget=600), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -713,8 +711,7 @@ def q_nsg_multivector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -740,8 +737,7 @@ def q_ann_distbuild_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -812,8 +808,7 @@ def q_ann_bootstrap_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q, v = _queries_norm(spark, sf_dir)
     out = graph_search.search_and_rerank(
         index, q, v, K,
-        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M,
-        q_sets=_qsets("fixed", sf_dir, q))
+        graph_search.SearchParams(min_pq=5, max_pq=400, budget=400), m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -1093,8 +1088,7 @@ def q_hnsw_multivector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ann_multivector_search`."""
     index = _hnsw_index(spark, sf_dir)
     q, v = _queries_norm(spark, sf_dir)
-    out = hnsw.search_and_rerank_hnsw(index, q, v, K, budget=M * 500, m=M,
-                                      q_sets=_qsets("fixed", sf_dir, q))
+    out = hnsw.search_and_rerank_hnsw(index, q, v, K, budget=M * 500, m=M)
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -1112,8 +1106,7 @@ def q_hnsw_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     budgets = (50, 100, 400)
     out = None
     for b in budgets:
-        res = hnsw.search_and_rerank_hnsw(index, q, v, K, budget=b, m=M,
-                                          q_sets=_qsets("fixed", sf_dir, q))
+        res = hnsw.search_and_rerank_hnsw(index, q, v, K, budget=b, m=M)
         per_query = recall.recall_at_k(
             res.select("query_set_id", "data_set_id"), gt, K)
         row = per_query.agg(

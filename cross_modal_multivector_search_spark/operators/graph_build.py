@@ -39,7 +39,7 @@ import os
 import shutil
 import tempfile
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import numpy as np
@@ -66,13 +66,27 @@ class RoarGraphParams:
     l_pjpq: int = 100    # pass-3 beam width
 
 
+class _RecordedSource:
+    """Mixin for index handles whose ``vecs`` came from
+    ``_collect_matrix``: their ``source`` field holds the ``(id, vec)``
+    projection that was collected, so ``graph_search.search_and_rerank``
+    can prove that the handle holds a data frame's rows. The DataFrame
+    is driver-only: pickling (the index broadcast) drops it, so the
+    payload is the same with or without it."""
+
+    def __getstate__(self):
+        return {**self.__dict__, "source": None}
+
+
 @dataclass
-class RoarGraphIndex:
+class RoarGraphIndex(_RecordedSource):
     """In-memory index handle: contiguous-index adjacency + vectors."""
     ids: np.ndarray            # index -> original vec_id
-    vecs: np.ndarray           # (n, d) normalized float64
+    vecs: np.ndarray           # (n, d) float64 rows of the base, id order
     adj: list                  # index -> np.ndarray of neighbor indexes
     entry_point: int           # index (not vec_id)
+    source: DataFrame | None = field(default=None, repr=False,
+                                     compare=False)
 
     def to_dataframe(self, spark: SparkSession) -> DataFrame:
         rows = [(int(self.ids[i]),
@@ -420,7 +434,8 @@ def build_roargraph(base: DataFrame, train_queries: DataFrame,
         adj[i] = np.array([ix[int(x)] for x in nbrs], dtype=np.int64)
         if is_ep:
             ep = i
-    return RoarGraphIndex(ids=ids, vecs=vecs, adj=adj, entry_point=ep)
+    return RoarGraphIndex(ids=ids, vecs=vecs, adj=adj, entry_point=ep,
+                          source=base.select(id_col, vec_col))
 
 
 _MMAP_SNAPSHOT_BYTES = 512 * 1024 * 1024
@@ -704,7 +719,8 @@ def build_roargraph_dist(base: DataFrame, train_queries: DataFrame,
         bc.destroy()
         bc_pad.destroy()
     return RoarGraphIndex(ids=ids, vecs=vecs, adj=final_adj,
-                          entry_point=ep)
+                          entry_point=ep,
+                          source=base.select(id_col, vec_col))
 
 
 def save_graph(index: RoarGraphIndex, spark: SparkSession,
@@ -803,4 +819,5 @@ def load_graph(spark: SparkSession, path: str,
     meta = spark.read.parquet(f"{path}/meta.parquet").collect()[0]
     ep = int(_to_local(ids, np.asarray([meta["entry_point"]],
                                        dtype=np.int64), "entry point")[0])
-    return RoarGraphIndex(ids=ids, vecs=vecs, adj=adj, entry_point=ep)
+    return RoarGraphIndex(ids=ids, vecs=vecs, adj=adj, entry_point=ep,
+                          source=base.select(id_col, vec_col))

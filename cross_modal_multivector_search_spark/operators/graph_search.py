@@ -12,8 +12,17 @@ executors; one Arrow batch of query sets at a time runs the NumPy beam
 search. Traversal stays node-local inside the UDF; Spark parallelizes
 across query sets (the reference's OpenMP-over-queries boundary).
 
-The emitted candidate lists feed operators/rerank.py — the same two-phase
-pipeline, with the exact scorer pruned to candidates.
+``multivector_search`` emits candidate lists, which
+``rerank.rerank`` scores in a second distributed phase.
+``search_and_rerank`` finishes the two phases inside the search task
+when the index provably holds the data side's vectors: each query set
+lives whole in one task and ``RoarGraphIndex.vecs`` already holds every
+candidate set's members, so the task scores its candidate sets from the
+index with the rerank's batched kernel and emits the ranked rows — no
+query-side fetch, no candidate or corpus shuffle, no join and no window
+(the reference likewise reranks each query set right after its search,
+over the same base matrix: `MultiVectorReranker::Rerank`,
+`/root/reference/src/multivector_reranker.cpp:38-98`).
 """
 
 from __future__ import annotations
@@ -28,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, LongType,
                                StructField, StructType)
 
+from ..functions import metrics as M
 from . import _roar_core as core
 from .graph_build import RoarGraphIndex
 
@@ -77,6 +87,49 @@ def _cand_frame(qsids, results: list, ids: np.ndarray):
     })
 
 
+# the ranked rows of a two-phase search (the ``rerank.rerank`` columns)
+_RANKED_SCHEMA = StructType([
+    StructField("query_set_id", LongType()),
+    StructField("rank", IntegerType()),
+    StructField("data_set_id", LongType()),
+    StructField("score", DoubleType()),
+])
+
+
+def _rerank_frame(idx, qsids, sets: list, results: list, k: int,
+                  metric: str, m: int):
+    """One batch's in-task rerank (``_RANKED_SCHEMA``): per query set,
+    its candidate base ids map to data sets by the fixed-m contract
+    (set = vid div m, as ``rerank.candidates_to_sets``), each distinct
+    set's members — base rows s*m .. s*m+m-1 that the index holds, so a
+    partial last set keeps its true cardinality — are gathered from
+    ``idx.vecs`` in id order (``idx.ids`` is ascending, the
+    ``_collect_matrix`` order), one ``SET_METRICS_BATCH[metric]`` call
+    scores them all, and the top k by (score desc, data_set_id asc)
+    survive. None when no query set has a candidate."""
+    fn = M.SET_METRICS_BATCH[metric]
+    ids = idx.ids
+    cols = {c: [] for c in _RANKED_SCHEMA.fieldNames()}
+    for qsid, q, res in zip(qsids, sets, results):
+        local = [c for c, _ in res if len(c)]
+        if not local:
+            continue
+        d_sets = np.unique(ids[np.concatenate(local).astype(np.int64)] // m)
+        members = (d_sets[:, None] * m + np.arange(m)).ravel()
+        loc = np.searchsorted(ids, members).clip(max=len(ids) - 1)
+        held = ids[loc] == members
+        scores = fn(q, idx.vecs[loc[held]],
+                    held.reshape(len(d_sets), m).sum(axis=1))
+        top = np.lexsort((d_sets, -scores))[:k]
+        cols["query_set_id"].append(np.full(len(top), qsid, dtype=np.int64))
+        cols["rank"].append(np.arange(1, len(top) + 1, dtype=np.int32))
+        cols["data_set_id"].append(d_sets[top])
+        cols["score"].append(scores[top])
+    if not cols["score"]:
+        return None
+    return pd.DataFrame({c: np.concatenate(v) for c, v in cols.items()})
+
+
 def _balanced_grouped(query_vecs: DataFrame, set_id: str) -> DataFrame:
     """Attach ``__slotkey`` — a probed collision-free partition key over
     ``pmod(set_id, p)`` — and hash-repartition on it, so that up to p
@@ -106,13 +159,16 @@ def _balanced_grouped(query_vecs: DataFrame, set_id: str) -> DataFrame:
 
 def _search_grouped(index, query_vecs: DataFrame, kernel,
                     set_id: str, vec_id: str, vec_col: str,
-                    budget_col: str | None = None) -> DataFrame:
+                    budget_col: str | None = None,
+                    rerank: tuple | None = None) -> DataFrame:
     """The grouped search path the single-index engines share:
     balanced grouping of the query sets, the index broadcast, one
     ``mapInPandas`` pass and the candidate emit. ``kernel(index, sets,
     budgets)`` searches one Arrow batch — ``sets`` the member matrices,
     ``budgets`` the per-set ``budget_col`` values or None — and returns
-    per set its per-member ``(local ids, dists)``."""
+    per set its per-member ``(local ids, dists)``. ``rerank=(k, metric,
+    m)`` replaces the candidate emit with the in-task rerank
+    (``_rerank_frame``)."""
     from ..util import cached_broadcast
 
     # the index handle is broadcast ONCE per session (cached_broadcast —
@@ -150,31 +206,51 @@ def _search_grouped(index, query_vecs: DataFrame, kernel,
                               for r in mats]) for mats in pdf["mats"]]
             budgets = (pdf["_budget"].to_numpy(dtype=np.int64)
                        if budget_col is not None else None)
-            out = _cand_frame(pdf["query_set_id"].to_numpy(dtype=np.int64),
-                              kernel(idx, sets, budgets), idx.ids)
+            qsids = pdf["query_set_id"].to_numpy(dtype=np.int64)
+            results = kernel(idx, sets, budgets)
+            out = (_cand_frame(qsids, results, idx.ids) if rerank is None
+                   else _rerank_frame(idx, qsids, sets, results, *rerank))
             if out is not None:
                 yield out
 
-    return grouped.mapInPandas(search_batches, schema=_CAND_SCHEMA)
+    return grouped.mapInPandas(
+        search_batches,
+        schema=_CAND_SCHEMA if rerank is None else _RANKED_SCHEMA)
 
 
-def multivector_search(index: RoarGraphIndex, query_vecs: DataFrame,
-                       params: SearchParams = SearchParams(),
-                       set_id: str = "set_id", vec_id: str = "vec_id",
-                       vec_col: str = "vec",
-                       budget_col: str | None = None) -> DataFrame:
-    """query_vecs(set_id, vec_id, vec) -> per-member candidates
-    (query_set_id, member_pos, base_vec_id, dist).
+def _holds_rows(index, data_vecs: DataFrame) -> bool:
+    """Whether ``index.vecs`` provably are ``data_vecs``' rows: the
+    ``(id, vec)`` projection the index was collected from (its
+    driver-only ``source``) is semantically the same plan as
+    ``data_vecs``' own projection."""
+    src = index.source
+    return (src is not None and set(src.columns) <= set(data_vecs.columns)
+            and data_vecs.select(*src.columns).sameSemantics(src))
 
-    dist is the negated inner product (reference convention). The number
-    of candidates per member equals its final beam size — budget
-    allocation decides how deep each member searched.
 
-    ``budget_col`` names an optional per-set column overriding BOTH
-    max_pq and budget for that set (the reference sweep's budget knob):
-    a whole budget sweep then runs as ONE pass instead of one search
-    job per budget. The shared-visited variant ignores it.
-    """
+def _search_then_rerank(index, query_vecs: DataFrame, kernel,
+                        data_vecs: DataFrame, k: int, metric: str,
+                        m: int | None, mapping: DataFrame | None,
+                        q_sets: list | None) -> DataFrame:
+    """Two-phase search over ``kernel``'s candidates: reranked inside
+    the search task when the fixed-m contract applies and the index
+    holds ``data_vecs``' rows (``_holds_rows``), else by
+    ``rerank.rerank`` over the emitted candidates."""
+    from .rerank import rerank
+    if metric not in M.SET_METRICS_BATCH:
+        raise ValueError(f"unknown metric {metric!r}")
+    if m is not None and mapping is None and _holds_rows(index, data_vecs):
+        return _search_grouped(index, query_vecs, kernel, "set_id",
+                               "vec_id", "vec", rerank=(k, metric, m))
+    cands = _search_grouped(index, query_vecs, kernel, "set_id", "vec_id",
+                            "vec")
+    return rerank(cands.select("query_set_id", "base_vec_id"),
+                  query_vecs, data_vecs, k, metric=metric, m=m,
+                  mapping=mapping, q_sets=q_sets)
+
+
+def _roar_kernel(params: SearchParams):
+    """The per-batch RoarGraph/NSG search kernel for ``params``."""
     min_pq, max_pq, budget = params.min_pq, params.max_pq, params.budget
     adaptive = params.adaptive
 
@@ -194,9 +270,28 @@ def multivector_search(index: RoarGraphIndex, query_vecs: DataFrame,
             return core.batch_multivector_search(
                 idx.adj, idx.vecs, sets, idx.entry_point, min_pq,
                 max_pq_eff, budget_eff, adaptive)
+    return kernel
 
-    return _search_grouped(index, query_vecs, kernel, set_id, vec_id,
-                           vec_col, budget_col)
+
+def multivector_search(index: RoarGraphIndex, query_vecs: DataFrame,
+                       params: SearchParams = SearchParams(),
+                       set_id: str = "set_id", vec_id: str = "vec_id",
+                       vec_col: str = "vec",
+                       budget_col: str | None = None) -> DataFrame:
+    """query_vecs(set_id, vec_id, vec) -> per-member candidates
+    (query_set_id, member_pos, base_vec_id, dist).
+
+    dist is the negated inner product (reference convention). The number
+    of candidates per member equals its final beam size — budget
+    allocation decides how deep each member searched.
+
+    ``budget_col`` names an optional per-set column overriding BOTH
+    max_pq and budget for that set (the reference sweep's budget knob):
+    a whole budget sweep then runs as ONE pass instead of one search
+    job per budget. The shared-visited variant ignores it.
+    """
+    return _search_grouped(index, query_vecs, _roar_kernel(params), set_id,
+                           vec_id, vec_col, budget_col)
 
 
 def search_and_rerank(index: RoarGraphIndex, query_vecs: DataFrame,
@@ -206,12 +301,21 @@ def search_and_rerank(index: RoarGraphIndex, query_vecs: DataFrame,
                       m: int | None = None,
                       mapping: DataFrame | None = None,
                       q_sets: list | None = None) -> DataFrame:
-    """The full flagship pipeline: ANN candidates -> set-level rerank.
+    """The full flagship pipeline: ANN candidates -> set-level top-k
+    (query_set_id, rank, data_set_id, score), equal to
+    ``rerank.rerank(multivector_search(...))``.
 
-    ``q_sets``: optional pre-fetched query-side matrices for the rerank
-    stage (see ``rerank.rerank``)."""
-    from .rerank import rerank
-    cands = multivector_search(index, query_vecs, params)
-    return rerank(cands.select("query_set_id", "base_vec_id"),
-                  query_vecs, data_vecs, k, metric=metric, m=m,
-                  mapping=mapping, q_sets=q_sets)
+    With fixed cardinality ``m``, no ``mapping``, and an index that was
+    collected from ``data_vecs``' own ``(vec_id, vec)`` rows (the index
+    constructors record that projection; the check is plan equality),
+    the rerank runs inside the search task over ``index.vecs``. Data
+    set membership then follows the fixed-m contract: set s is the base
+    rows with ids s*m .. s*m+m-1 (ids >= 0), i.e. ``set_id == vec_id
+    div m`` in ``data_vecs``; a partial last set keeps the rows it has.
+    Any other case takes the candidate emit + ``rerank.rerank`` path.
+
+    ``q_sets``: optional pre-fetched query-side matrices, used only by
+    the ``rerank.rerank`` path (see there); the in-task rerank already
+    holds each query set."""
+    return _search_then_rerank(index, query_vecs, _roar_kernel(params),
+                               data_vecs, k, metric, m, mapping, q_sets)

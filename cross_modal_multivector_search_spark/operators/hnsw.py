@@ -18,10 +18,10 @@ smooth-Chamfer reranker. This module reproduces those semantics:
   the index broadcasts; one Arrow batch of query sets at a time runs
   the NumPy layer descent + layer-0 beam search (reusing
   `_roar_core.BeamQueue` — hnswlib's searchKnn candidate list has the
-  same bounded-sorted-set semantics). Candidates feed the SAME
-  `operators/rerank.py` two-phase pipeline the RoarGraph path uses,
-  exactly like the reference shares `MultiVectorReranker` between its
-  RoarGraph and HNSW drivers.
+  same bounded-sorted-set semantics). Candidates feed the SAME rerank
+  the RoarGraph path uses (in the search task, or `operators/rerank.py`
+  — see `graph_search.search_and_rerank`), exactly like the reference
+  shares `MultiVectorReranker` between its RoarGraph and HNSW drivers.
 
 Distance convention: negated inner product on pre-normalized vectors
 (reference `InnerProductSpace` + normalize, `tests/hnsw/
@@ -36,7 +36,7 @@ driver row uses (tests additionally pin full directed reachability).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import numpy as np
@@ -47,7 +47,9 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType,
                                StructField, StructType)
 
 from . import _roar_core as core
-from .graph_search import _CAND_SCHEMA, _cand_frame, _search_grouped
+from .graph_build import _collect_matrix, _RecordedSource, _ship_array
+from .graph_search import (_CAND_SCHEMA, _cand_frame, _search_grouped,
+                           _search_then_rerank)
 from .set_search import fetch_grouped_sets
 
 _LEVEL_GRAPH_SCHEMA = StructType([
@@ -112,15 +114,17 @@ def _assemble_adj(entries, ix: dict, n: int):
 
 
 @dataclass
-class HnswIndex:
+class HnswIndex(_RecordedSource):
     """Broadcastable handle: per-level adjacency over contiguous
     indexes + the vector matrix."""
     ids: np.ndarray            # index -> original vec_id
-    vecs: np.ndarray           # (n, d) normalized float64
+    vecs: np.ndarray           # (n, d) float64 rows of the base, id order
     levels: np.ndarray         # index -> top level of the node
     adj: list                  # adj[level][index] -> np.ndarray of indexes
     entry_point: int           # index (not vec_id)
     max_level: int
+    source: DataFrame | None = field(default=None, repr=False,
+                                     compare=False)
 
     def to_dataframe(self, spark: SparkSession) -> DataFrame:
         rows = _graph_rows(self.ids, self.levels, self.adj,
@@ -293,24 +297,26 @@ def build_hnsw_df(base: DataFrame, params: HnswParams = HnswParams(),
     return payload.mapInPandas(build, schema=_LEVEL_GRAPH_SCHEMA)
 
 
-def _assemble(rows: pd.DataFrame, ids: np.ndarray,
-              vecs: np.ndarray) -> HnswIndex:
+def _assemble(rows: pd.DataFrame, base: DataFrame, id_col: str,
+              vec_col: str) -> HnswIndex:
+    """The handle over ``rows`` (the level-graph rows) and ``base``'s
+    collected vectors."""
+    ids, vecs = _collect_matrix(base, id_col, vec_col)
     ix = {int(v): i for i, v in enumerate(ids)}
     adj, levels, entry, max_level = _assemble_adj(
         zip(rows["level"].to_numpy(), rows["src"].to_numpy(),
             rows["nbrs"].to_numpy(), rows["is_entry"].to_numpy()),
         ix, len(ids))
     return HnswIndex(ids=ids, vecs=vecs, levels=levels, adj=adj,
-                     entry_point=entry, max_level=max_level)
+                     entry_point=entry, max_level=max_level,
+                     source=base.select(id_col, vec_col))
 
 
 def build_hnsw(base: DataFrame, params: HnswParams = HnswParams(),
                id_col: str = "vec_id", vec_col: str = "vec") -> HnswIndex:
     """Build and assemble the broadcastable in-memory handle."""
-    from .graph_build import _collect_matrix
     rows = build_hnsw_df(base, params, id_col, vec_col).toPandas()
-    ids, vecs = _collect_matrix(base, id_col, vec_col)
-    return _assemble(rows, ids, vecs)
+    return _assemble(rows, base, id_col, vec_col)
 
 
 def save_hnsw(index: HnswIndex, spark: SparkSession, path: str) -> None:
@@ -322,10 +328,8 @@ def save_hnsw(index: HnswIndex, spark: SparkSession, path: str) -> None:
 
 def load_hnsw(spark: SparkSession, path: str, base: DataFrame,
               id_col: str = "vec_id", vec_col: str = "vec") -> HnswIndex:
-    from .graph_build import _collect_matrix
     rows = spark.read.parquet(f"{path}/adjacency.parquet").toPandas()
-    ids, vecs = _collect_matrix(base, id_col, vec_col)
-    return _assemble(rows, ids, vecs)
+    return _assemble(rows, base, id_col, vec_col)
 
 
 def search_knn_local(index: HnswIndex, q: np.ndarray, ef: int, k: int):
@@ -374,14 +378,15 @@ def search_and_rerank_hnsw(index: HnswIndex, query_vecs: DataFrame,
                            metric: str = "smooth_chamfer",
                            q_sets: list | None = None) -> DataFrame:
     """Two-phase HNSW baseline: fixed-split member searches -> set-level
-    rerank — the complete `search_rerank_hnsw.cpp` pipeline.
-    ``q_sets``: optional pre-fetched rerank query matrices
-    (see ``rerank.rerank``)."""
-    from . import rerank
-    cands = multivector_search_hnsw(index, query_vecs, budget)
-    return rerank.rerank(cands.select("query_set_id", "base_vec_id"),
-                         query_vecs, data_vecs, k, m=m, metric=metric,
-                         q_sets=q_sets)
+    rerank — the complete `search_rerank_hnsw.cpp` pipeline. Reranks
+    inside the search task exactly when ``graph_search.search_and_rerank``
+    does (fixed ``m`` and an index collected from ``data_vecs``' rows);
+    ``q_sets``: optional pre-fetched query matrices for the
+    ``rerank.rerank`` path otherwise."""
+    return _search_then_rerank(
+        index, query_vecs,
+        lambda idx, sets, _budgets: _fixed_split_search(idx, sets, budget),
+        data_vecs, k, metric, m, None, q_sets)
 
 
 # ---------------------------------------------------------------------------
@@ -461,8 +466,6 @@ def build_hnsw_wave(base: DataFrame, params: HnswParams = HnswParams(),
     draws reuse the serial pipeline's seeded RNG over id order, wave
     searches read a frozen snapshot, and commits/prunes apply in
     (id, level) order."""
-    from .graph_build import (_collect_matrix, _NodeLocalArray,
-                              _ship_array)
     spark = base.sparkSession
     sc = spark.sparkContext
     m, efc = params.m, params.ef_construction
@@ -646,7 +649,7 @@ def build_hnsw_wave(base: DataFrame, params: HnswParams = HnswParams(),
     _wave_repair_layer0(adj[0], vecs, entry)
     return HnswIndex(ids=ids, vecs=vecs, levels=levels,
                      adj=adj[:top + 1], entry_point=entry,
-                     max_level=top)
+                     max_level=top, source=base.select(id_col, vec_col))
 
 
 def _wave_repair_layer0(adj0: list, vecs: np.ndarray,

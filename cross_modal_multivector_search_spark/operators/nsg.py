@@ -388,7 +388,8 @@ def build_nsg(base: DataFrame, params: NsgParams = NsgParams(),
         bc.destroy()
     for d in tmp_dirs:
         shutil.rmtree(d, ignore_errors=True)
-    return RoarGraphIndex(ids=ids, vecs=vecs, adj=adj, entry_point=ep)
+    return RoarGraphIndex(ids=ids, vecs=vecs, adj=adj, entry_point=ep,
+                          source=base.select(id_col, vec_col))
 
 
 def _tree_grow(adj: list, vecs: np.ndarray, ep: int, beam: int) -> list:

@@ -9,10 +9,10 @@ from pyspark.sql import functions as F
 
 from cross_modal_multivector_search_spark import testdata as TD
 from cross_modal_multivector_search_spark.operators import (
-    hnsw, recall, set_search,
+    hnsw, recall, rerank, set_search,
 )
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, assert_same_ranking, is_in_task
 
 
 def _unit_rows(n, d, seed):
@@ -158,6 +158,23 @@ def test_spark_pipeline_matches_exact_chamfer(spark):
     r = recall.recall_at_k(out.select("query_set_id", "data_set_id"),
                            gt, 10)
     assert r.agg(F.min("recall")).first()[0] == pytest.approx(1.0)
+
+
+def test_search_and_rerank_in_task_equals_two_stage(spark):
+    """The HNSW two-phase path reranks inside the search task and returns
+    what rerank(multivector_search_hnsw(...)) returns."""
+    v = TD.embeddings_norm(spark, SF_SMOKE)
+    q = v.filter(F.col("set_id") < 10)
+    idx = hnsw.build_hnsw(v.select("vec_id", "vec"),
+                          hnsw.HnswParams(m=12, ef_construction=60,
+                                          seed=7))
+    got = hnsw.search_and_rerank_hnsw(idx, q, v, 10, budget=100,
+                                      m=TD.M_FIXED)
+    assert is_in_task(got)
+    cands = hnsw.multivector_search_hnsw(idx, q, budget=100)
+    want = rerank.rerank(cands.select("query_set_id", "base_vec_id"),
+                         q, v, 10, m=TD.M_FIXED)
+    assert_same_ranking(got, want)
 
 
 def test_fixed_split_budget_semantics(spark):

@@ -5,16 +5,21 @@ Recall (not graph equality) is the reference's own correctness notion
 high recall at a generous beam budget on toy data (FIXTURES.md check 6).
 """
 
+import dataclasses
+import pickle
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from cross_modal_multivector_search_spark import testdata as TD
 from cross_modal_multivector_search_spark.operators import (
-    _roar_core as core, graph_build, graph_search, recall, set_search,
+    _roar_core as core, graph_build, graph_search, mapping, recall, rerank,
+    set_search,
 )
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, assert_same_ranking, is_in_task, plan_text
 
 
 def test_beam_queue_semantics():
@@ -186,3 +191,100 @@ def test_graph_save_load_roundtrip(spark, index_and_vecs, tmp_path):
     assert len(loaded.adj) == len(index.adj)
     for a, b in zip(loaded.adj, index.adj):
         assert list(a) == list(b)
+
+
+# --- in-task rerank: search_and_rerank == rerank(multivector_search) ----
+
+_SEARCH = graph_search.SearchParams(min_pq=5, max_pq=100, budget=100)
+
+
+def _two_stage(index, queries, data, params, metric, m=TD.M_FIXED,
+               mapping=None):
+    cands = graph_search.multivector_search(index, queries, params)
+    return rerank.rerank(cands.select("query_set_id", "base_vec_id"),
+                         queries, data, 10, metric=metric, m=m,
+                         mapping=mapping)
+
+
+@pytest.mark.parametrize("shared_visited", [False, True],
+                         ids=["adaptive", "shared_visited"])
+@pytest.mark.parametrize("metric",
+                         ["smooth_chamfer", "summed_max_similarity"])
+def test_in_task_rerank_equals_two_stage(index_and_vecs, metric,
+                                         shared_visited):
+    index, vecs = index_and_vecs
+    queries = vecs.filter(F.col("set_id") < 10)
+    params = dataclasses.replace(_SEARCH, shared_visited=shared_visited)
+    got = graph_search.search_and_rerank(index, queries, vecs, 10, params,
+                                         metric=metric, m=TD.M_FIXED)
+    assert is_in_task(got)
+    assert_same_ranking(got, _two_stage(index, queries, vecs, params,
+                                        metric))
+
+
+def test_in_task_rerank_partial_last_set(spark):
+    """A base of 498 vectors at m=5: the last set (99) holds 3 rows, and
+    the in-task gather scores it with its true cardinality."""
+    data = TD.embeddings_norm(spark, SF_SMOKE).filter(F.col("vec_id") < 498)
+    base = data.select("vec_id", "vec")
+    index = graph_build.build_roargraph(
+        base, base, graph_build.RoarGraphParams(m_sq=20, m_pjbp=12,
+                                                l_pjpq=40))
+    queries = data.filter(F.col("set_id") >= 95)
+    got = graph_search.search_and_rerank(index, queries, data, 10, _SEARCH,
+                                         m=TD.M_FIXED)
+    assert is_in_task(got)
+    want = _two_stage(index, queries, data, _SEARCH, "smooth_chamfer")
+    assert_same_ranking(got, want)
+    assert 99 in set(got.toPandas()["data_set_id"])
+
+
+def test_rerank_fallback_when_data_is_not_the_index(index_and_vecs):
+    """data_vecs that are not the index's rows go through rerank.rerank."""
+    index, vecs = index_and_vecs
+    queries = vecs.filter(F.col("set_id") < 10)
+    data = vecs.filter(F.col("set_id") < 80)
+    got = graph_search.search_and_rerank(index, queries, data, 10, _SEARCH,
+                                         m=TD.M_FIXED)
+    assert not is_in_task(got)
+    assert_same_ranking(got, _two_stage(index, queries, data, _SEARCH,
+                                        "smooth_chamfer"))
+
+
+def test_rerank_fallback_with_mapping(spark, index_and_vecs):
+    """A cardinality mapping goes through rerank.rerank."""
+    index, vecs = index_and_vecs
+    queries = vecs.filter(F.col("set_id") < 10)
+    mp = mapping.cardinality_mapping_local(
+        spark, [(s, TD.M_FIXED) for s in range(100)])
+    got = graph_search.search_and_rerank(index, queries, vecs, 10, _SEARCH,
+                                         mapping=mp)
+    assert not is_in_task(got)
+    assert_same_ranking(got, _two_stage(index, queries, vecs, _SEARCH,
+                                        "smooth_chamfer", m=None,
+                                        mapping=mp))
+
+
+def test_in_task_rerank_plan_shape(index_and_vecs):
+    """One exchange (the balanced query-set grouping); no join, window or
+    broadcast exchange — a Catalyst rewrite that adds one fails here."""
+    index, vecs = index_and_vecs
+    plan = plan_text(graph_search.search_and_rerank(
+        index, vecs.filter(F.col("set_id") < 10), vecs, 10, _SEARCH,
+        m=TD.M_FIXED))
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    for op in ("SortMergeJoin", "Window", "BroadcastExchange"):
+        assert op not in plan, plan
+
+
+def test_index_pickle_drops_recorded_source(index_and_vecs):
+    index, _ = index_and_vecs
+    assert index.source is not None
+    payload = pickle.dumps(index)
+    assert payload == pickle.dumps(dataclasses.replace(index, source=None))
+    back = pickle.loads(payload)
+    assert back.source is None
+    assert np.array_equal(back.ids, index.ids)
+    assert np.array_equal(back.vecs, index.vecs)
+    assert back.entry_point == index.entry_point
+    assert all(np.array_equal(a, b) for a, b in zip(back.adj, index.adj))
