@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import dedup, text
+from .dedup import _in, _q
 
 
 def decontaminate(train_docs: DataFrame, benchmark_docs: DataFrame,
@@ -68,13 +69,13 @@ def curate_corpus(docs: DataFrame, quality_threshold: float = 0.5,
                                         dedup_pairs=False)
     # non-canonical members only: cluster sizes aren't needed here, so
     # go straight to components (skips dedup_clusters' size groupBy+join)
+    i = _q(id_col, True)
     drop_near = dedup.connected_components(pairs) \
-        .filter(F.col("node") != F.col("component")) \
-        .select(F.col("node").alias(id_col))
+        .where("node != component").selectExpr(f"node AS {i}")
     # language + quality features in one token pass. The former design
-    # carried the exact-dedup digest THROUGH this groupBy (carry_cols)
-    # so the keep-set could derive from the feature table — but the
-    # keep aggregate prunes to (digest, id), which makes its copy of
+    # carried the exact-dedup digest THROUGH this groupBy so the
+    # keep-set could derive from the feature table — but the keep
+    # aggregate prunes to (digest, id), which makes its copy of
     # the feats subtree canonically different from the join side's, so
     # the tokenize+9-aggregate map executed TWICE (r15 stage profile;
     # exchange dedup does not fire across the differently-pruned
@@ -95,18 +96,17 @@ def curate_corpus(docs: DataFrame, quality_threshold: float = 0.5,
     # all docs or the token-having ones that reach feats, and ids are
     # unique, so the semi join on the id alone reproduces the
     # (digest, id) join.
-    keep = (docs.select(F.md5(F.col(text_col)).alias("__digest"),
-                        F.col(id_col))
-            .groupBy("__digest").agg(F.min(id_col).alias(id_col))
-            .select(id_col))
+    keep = (docs.selectExpr(f"md5({_q(text_col, True)}) AS __digest", i)
+            .groupBy("__digest").agg(F.expr(f"min({i}) AS {i}"))
+            .selectExpr(i))
     out = (feats.join(keep, id_col, "semi")
            .join(drop_near, id_col, "anti"))
     if benchmark_docs is not None:
         contaminated = decontaminate(
             docs, benchmark_docs, shingle_n, id_col=id_col,
-            text_col=text_col).select(id_col).distinct()
+            text_col=text_col).selectExpr(i).distinct()
         out = out.join(contaminated, id_col, "anti")
     return (out
-            .filter(F.col("pred_lang").isin(*langs)
-                    & (F.col("quality_score") >= quality_threshold))
-            .select(id_col, "pred_lang", "quality_score", "n_tokens"))
+            .where(f"{_in('pred_lang', langs)} AND quality_score >= "
+                   f"{float(quality_threshold)!r}D")
+            .selectExpr(i, "pred_lang", "quality_score", "n_tokens"))

@@ -15,6 +15,16 @@ near-dup — each designed around one shuffle shape that scales:
 Cross-engine determinism: every hash is md5 (identical in Spark and
 DuckDB), so each operator is fully oracle-checkable; no engine-specific
 hash (xxhash64/murmur) appears in results.
+
+Plan construction rule (here and in text.py/curation.py): the
+token/shingle/minhash plans are written as SQL expression strings
+(``selectExpr``, ``F.expr``, ``where("...")``), one JVM call each. A
+nested ``F.*``/``Column`` chain costs 3-8 py4j round trips per call,
+PySpark 4's call-site capture included: built that way, the
+minhash_lsh_pairs plan took 1,280 round trips and ~250 ms of driver
+time on every call (4 vCPU), against ~140 and ~60 ms as strings.
+Caller-supplied names and values enter those strings only through
+``_q``.
 """
 
 from __future__ import annotations
@@ -26,9 +36,30 @@ from ..functions import vector as V
 from .partitioning import ensure_parallelism
 
 
+def _q(s: str, ident: bool = False) -> str:
+    """``s`` quoted for a SQL expression string: an identifier in
+    backticks (inner backticks doubled) when ``ident``, else a string
+    literal with ``\\`` and ``'`` escaped."""
+    if ident:
+        return "`" + s.replace("`", "``") + "`"
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _in(expr: str, values) -> str:
+    """``expr IN (values)`` with quoted values; ``false`` when there are
+    none (an empty ``IN ()`` does not parse)."""
+    return f"{expr} IN ({', '.join(map(_q, values))})" if values else \
+        "false"
+
+
+def _tok_array(text_col: str) -> str:
+    """Non-empty whitespace tokens of ``text_col`` as a SQL array."""
+    return (f"filter(split({_q(text_col, True)}, '\\\\s+'), "
+            "x -> length(x) > 0)")
+
+
 def tokens(docs: DataFrame, id_col: str = "doc_id",
            text_col: str = "text",
-           extra_cols: tuple[str, ...] = (),
            work_factor: float = 1.0) -> DataFrame:
     """(doc_id, idx, token): whitespace tokens, contiguous 1-based index.
 
@@ -36,18 +67,16 @@ def tokens(docs: DataFrame, id_col: str = "doc_id",
     the ANSI oracle) — numbering first would leave idx gaps on leading/
     repeated whitespace. Input is repartitioned up to cluster parallelism
     first (identity at scale) so the explode+hash consumers parallelize
-    even from a one-split file. ``extra_cols`` ride along unchanged.
+    even from a one-split file.
     ``work_factor``: the caller's downstream per-byte map cost relative
     to plain tokenize+count (see ensure_parallelism) — hash-heavy
     consumers pass >1 so their smaller break-even input still splits.
     """
-    toks = F.filter(F.split(F.col(text_col), r"\s+"),
-                    lambda x: F.length(x) > 0)
+    i = _q(id_col, True)
     return (ensure_parallelism(docs, work_factor=work_factor)
-            .select(F.col(id_col), *extra_cols,
-                    F.posexplode(toks).alias("pos0", "token"))
-            .select(id_col, *extra_cols,
-                    (F.col("pos0") + 1).alias("idx"), "token"))
+            .selectExpr(i, f"posexplode({_tok_array(text_col)}) "
+                           "AS (pos0, token)")
+            .selectExpr(i, "pos0 + 1 AS idx", "token"))
 
 
 def shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
@@ -67,18 +96,16 @@ def shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
     sf0.1 file). Hash-per-shingle consumers (minhash, winnowing) pass
     higher factors.
     """
-    toks = F.filter(F.split(F.col(text_col), r"\s+"),
-                    lambda x: F.length(x) > 0)
-    sh = F.transform(
-        F.sequence(F.lit(1), F.size(F.col("_toks")) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, n)))
     # guard: sequence(1, 0) would infer step -1 and yield [1, 0]
-    sh = F.when(F.size(F.col("_toks")) >= n, sh).otherwise(
-        F.array().cast("array<string>"))
+    sh = (f"CASE WHEN size(_toks) >= {n} THEN transform("
+          f"sequence(1, size(_toks) - {n - 1}), "
+          f"i -> concat_ws(' ', slice(_toks, i, {n}))) "
+          "ELSE CAST(array() AS array<string>) END")
+    i = _q(id_col, True)
     return (ensure_parallelism(docs, work_factor=work_factor)
-            .select(F.col(id_col), toks.alias("_toks"))
-            .select(id_col, F.posexplode(sh).alias("pos0", "shingle"))
-            .select(id_col, (F.col("pos0") + 1).alias("idx"), "shingle"))
+            .selectExpr(i, f"{_tok_array(text_col)} AS _toks")
+            .selectExpr(i, f"posexplode({sh}) AS (pos0, shingle)")
+            .selectExpr(i, "pos0 + 1 AS idx", "shingle"))
 
 
 def dedup_exact(docs: DataFrame, id_col: str = "doc_id",
@@ -162,36 +189,31 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16,
     # skipping it saves a shuffle + enables map-side partial aggs.
     # same map-side hash load as minhash_signatures: num_hashes md5
     # evaluations per shingle inside the partial aggregation
+    i = _q(id_col, True)
     sh = shingles(docs, shingle_n, id_col, text_col,
-                  work_factor=2.0 + num_hashes) \
-        .select(id_col, "shingle")
-    mins = [F.min(F.md5(F.concat_ws(":", F.lit(s), F.col("shingle"))))
-            .alias(f"mh{s}") for s in range(num_hashes)]
-    wide = sh.groupBy(id_col).agg(*mins)
+                  work_factor=2.0 + num_hashes).selectExpr(i, "shingle")
+    wide = sh.groupBy(id_col).agg(*[
+        F.expr(f"min(md5(concat_ws(':', {s}, shingle))) AS mh{s}")
+        for s in range(num_hashes)])
     # all band signatures in one pass over `wide` (explode of an inline
     # struct array); the signature table is O(docs x bands) rows of 3
     # short columns — ~1e-4 of corpus bytes at 100 TB.
-    band_structs = []
-    for band in range(bands):
-        seeds = range(band * rows_per_band, (band + 1) * rows_per_band)
-        sig = F.concat_ws("|", *[
-            F.concat_ws("@", F.lit(s), F.col(f"mh{s}")) for s in seeds])
-        band_structs.append(F.struct(F.lit(band).alias("band"),
-                                     sig.alias("sig")))
-    sigs = (wide.select(F.col(id_col),
-                        F.explode(F.array(*band_structs)).alias("bs"))
-            .select(id_col, "bs.band", "bs.sig"))
+    band_structs = ", ".join(
+        f"struct({band} AS band, concat_ws('|', " + ", ".join(
+            f"concat_ws('@', {s}, mh{s})"
+            for s in range(band * rows_per_band,
+                           (band + 1) * rows_per_band)) + ") AS sig)"
+        for band in range(bands))
+    sigs = (wide.selectExpr(i, f"explode(array({band_structs})) AS bs")
+            .selectExpr(i, "bs.band", "bs.sig"))
     # bucket-local pair stream: ascending ids per bucket, element i pairs
     # with every later element — two pipelined generators, never a
     # bucket^2 array in memory
-    buckets = (sigs.groupBy("band", "sig")
-               .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-               .filter(F.size("ids") > 1))
-    heads = buckets.select(F.posexplode("ids").alias("_i", "a"), "ids")
-    out = heads.select(
-        "a",
-        F.explode(F.slice(F.col("ids"), F.col("_i") + 2,
-                          F.size("ids"))).alias("b"))
+    out = (sigs.groupBy("band", "sig")
+           .agg(F.expr(f"sort_array(collect_set({i})) AS ids"))
+           .where("size(ids) > 1")
+           .selectExpr("posexplode(ids) AS (_i, a)", "ids")
+           .selectExpr("a", "explode(slice(ids, _i + 2, size(ids))) AS b"))
     return out.distinct() if dedup_pairs else out
 
 
@@ -373,22 +395,6 @@ def _resolve_edges_small(slim: DataFrame, emit) -> DataFrame:
     return slim.coalesce(1).mapInPandas(resolve, schema)
 
 
-# gate DECISIONS cached per (session, canonical pair-plan, threshold):
-# the branch choice for a static input never changes within a process
-# (the TD.n_rows precedent — only the is-small boolean is memoized;
-# the pairs themselves and the union-find recompute per invocation).
-_GATE_CACHE: dict[tuple, bool] = {}
-
-
-def _plan_key(df: DataFrame) -> str:
-    import re
-    try:
-        txt = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return ""
-    return re.sub(r"#\d+", "", txt)
-
-
 def _gate_pairs(pairs: DataFrame, a_col: str, b_col: str,
                 threshold: int):
     """(is_small, checkpointed_pairs): the size-gate decision plus a
@@ -396,24 +402,19 @@ def _gate_pairs(pairs: DataFrame, a_col: str, b_col: str,
 
     The pair lineage (shingle -> md5 -> groupBy -> bucket-explode) is
     EXPENSIVE; eagerly ``localCheckpoint()``-ing runs the chain exactly
-    once, and the gate count plus whichever path wins then read the
-    materialized blocks. The gate itself is a short-circuiting
-    ``limit(threshold+1).count()`` — r16: no row ever travels to the
-    driver for the decision (the old gate fetched up to threshold rows
-    via toPandas)."""
-    slim = (pairs.select(F.col(a_col).cast("long").alias("x"),
-                         F.col(b_col).cast("long").alias("y"))
-            .localCheckpoint())
+    once, and whichever path wins then reads the materialized blocks.
+    The exact pair count rides on that same job as an ``Observation``,
+    so the gate costs no job of its own and is decided afresh on every
+    call: no cached decision can go stale behind an overwritten path or
+    a new in-memory frame."""
+    from pyspark.sql import Observation
+    slim = pairs.selectExpr(f"CAST({_q(a_col, True)} AS BIGINT) AS x",
+                            f"CAST({_q(b_col, True)} AS BIGINT) AS y")
     if not threshold:
-        return False, slim
-    pk = _plan_key(pairs)
-    key = (pairs.sparkSession.sparkContext.applicationId, pk, threshold)
-    if not pk or key not in _GATE_CACHE:
-        small = slim.limit(threshold + 1).count() <= threshold
-        if not pk:
-            return small, slim
-        _GATE_CACHE[key] = small
-    return _GATE_CACHE[key], slim
+        return False, slim.localCheckpoint()
+    obs = Observation()
+    slim = slim.observe(obs, F.expr("count(1) AS n")).localCheckpoint()
+    return obs.get["n"] <= threshold, slim
 
 
 def _symmetrized_edges(slim: DataFrame) -> DataFrame:

@@ -3,6 +3,16 @@
 North-star extras (BASELINE.json): language ID, quality scoring, token
 counting, document fingerprinting. All JVM-side column expressions —
 no Python UDFs in these paths — and all portable to an ANSI-SQL oracle.
+
+Plan construction rule (lang_quality, tfidf_top_terms, bm25_rank and
+the curation pipeline): expressions are SQL strings
+(``selectExpr``/``F.expr``/``where``), one JVM call each, with caller
+names and values quoted by ``dedup._q``; double constants carry a
+``D`` suffix so they stay double (a bare ``100.0`` parses as decimal).
+Built from nested ``F.*``/``Column`` calls, these plans cost 500-1,300
+py4j round trips each (3-8 per call, call-site capture included): the
+four plans of one 1,000-document curation request took ~0.67 s of
+driver time, a fifth of the ~3.2 s request (4 vCPU, in-process).
 """
 
 from __future__ import annotations
@@ -10,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import shingles, tokens
+from .dedup import _in, _q, shingles, tokens
 
 # Ratio-of-small-integer statistics (k/n) often terminate exactly at a
 # decimal rounding boundary (e.g. 0.551375 at 5 dp), where engines'
@@ -164,9 +174,9 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5,
     scalar (the bigram_pmi pattern); per-doc top-k is the
     WindowGroupLimit workhorse. Nothing here ever shuffles more than
     O(distinct (doc, token)) rows."""
-    from .topk import grouped_topk
+    i = _q(id_col, True)
     t = tokens(docs, id_col, text_col)
-    tf = t.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
+    tf = t.groupBy(id_col, "token").agg(F.expr("count(1) AS tf"))
     # df and n_docs aggregate over the SAME tf table the scorer joins —
     # but whether their subtrees should be CANONICALLY SHARED with the
     # scorer's is a scale question, measured at both operating points
@@ -189,22 +199,21 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5,
     # reference, making every consumer's tf subtree byte-identical
     # (plan-verified at sf1.0: one Generate, tf exchange read 3x).
     if _tf_subtree_shared(docs):
-        df_t = tf.groupBy("token").agg(F.count_if(F.col("tf") > 0)
-                                       .alias("df"))
-        n = tf.groupBy(id_col).agg(F.max("tf").alias("_c")) \
-            .agg(F.count_if(F.col("_c") > 0).alias("n_docs"))
+        df_t = tf.groupBy("token").agg(F.expr("count_if(tf > 0) AS df"))
+        n = tf.groupBy(id_col).agg(F.expr("max(tf) AS _c")) \
+            .selectExpr("count_if(_c > 0) AS n_docs")
     else:
-        df_t = tf.groupBy("token").agg(F.count("tf").alias("df"))
-        n = tf.groupBy(id_col).agg(F.count("tf").alias("_c")) \
-            .agg(F.count("*").alias("n_docs"))
-    scored = (tf.join(df_t, "token")
-              .crossJoin(F.broadcast(n))
-              .withColumn("tfidf", F.round(
-                  F.col("tf") * F.log(F.col("n_docs") / F.col("df"))
-                  + ROUND_EPS, 5)))
-    return grouped_topk(
-        scored.select(id_col, "token", "tf", "tfidf"), [id_col],
-        [F.col("tfidf").desc(), F.col("token").asc()], k)
+        df_t = tf.groupBy("token").agg(F.expr("count(tf) AS df"))
+        n = tf.groupBy(id_col).agg(F.expr("count(tf) AS _c")) \
+            .selectExpr("count(1) AS n_docs")
+    # per-doc top-k: row_number + filter plans as WindowGroupLimit
+    return (tf.join(df_t, "token").crossJoin(F.broadcast(n))
+            .selectExpr("*", "round(tf * ln(n_docs / df) + "
+                        f"{ROUND_EPS!r}D, 5) AS tfidf")
+            .selectExpr(i, "token", "tf", "tfidf")
+            .selectExpr("*", f"row_number() OVER (PARTITION BY {i} "
+                        "ORDER BY tfidf DESC, token ASC) AS `rank`")
+            .where(f"`rank` <= {int(k)}"))
 
 
 def bm25_rank(docs: DataFrame, terms: list[str], k: int = 20,
@@ -217,70 +226,55 @@ def bm25_rank(docs: DataFrame, terms: list[str], k: int = 20,
       score(d) = sum_t ln(1 + (N - df_t + 0.5)/(df_t + 0.5))
                         * tf / (tf + k1 * (1 - b + b * dl/avgdl))
 
-    Returns (doc_id, rank, score). Scale shape: the tf table filters to
-    the query's terms BEFORE any shuffle (predicate on the token
-    column), document lengths come from the same one-pass token
-    aggregation, and df/N/avgdl are query-term- and scalar-sized
-    broadcasts (df here is bounded by len(terms), not the vocabulary)
-    — per-query work is O(docs containing a query term), never a
-    corpus scan per term. The global top-k goes through
-    orderBy().limit(k) so Catalyst plans TakeOrderedAndProject — a
-    distributed per-partition partial top-k — instead of sorting every
-    matching document in one WindowExec task (for a common query term
-    that is a large fraction of the corpus).
+    Returns (doc_id, score, rank). Scale shape: ONE token pass — a
+    single groupBy(doc) yields the document length ``dl`` and one
+    ``count_if(token = term)`` column per distinct query term, so the
+    per-doc table is O(docs x terms) however common a term is. A
+    one-row aggregate over that table (N, avgdl, df per term) is
+    broadcast back; both consumers read the same token exchange. The
+    global top-k goes through orderBy().limit(k) so Catalyst plans
+    TakeOrderedAndProject — a distributed per-partition partial top-k —
+    instead of sorting every matching document in one WindowExec task.
+    Repeated terms count once; no terms returns no rows.
 
     ``id_col`` must be non-null (it is the documents table's key).
     Documents with a null id are dropped before anything is computed,
     so they count toward neither N, avgdl nor df, and are never
     returned."""
-    # the scored join infers isnotnull(doc_id) into ITS copies of the
-    # tf/dl subtrees but not into df's/stats' copies, which makes the
-    # otherwise-identical subtrees canonically different — every
-    # consumer then re-runs the full token aggregation (r16 sf1.0 plan
-    # audit: two duplicated token exchanges). Filtering the input once
-    # puts the same isnotnull below every copy.
-    docs = docs.filter(F.col(id_col).isNotNull())
-    t = tokens(docs, id_col, text_col)
-    tf_all = t.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
-    dl = t.groupBy(id_col).agg(F.count("*").alias("dl"))
-    # count_if(dl > 0) == count(*) (dl >= 1 for every emitted doc) but
-    # keeps a live dl reference, so stats' copy of the dl subtree stays
-    # identical to the scorer join's and the per-doc length aggregation
-    # runs once (see tfidf_top_terms — plain count(*) lets Catalyst
-    # specialize the copy into a distinct aggregate with its own full
-    # token pass; r16 plan audit)
-    stats = dl.agg(F.count_if(F.col("dl") > 0).alias("n_docs"),
-                   F.avg("dl").alias("avgdl"))
-    tf_q = tf_all.filter(F.col("token").isin(list(terms)))
-    # same live-reference rule for df over the filtered tf (r15 used
-    # count(tf), which Catalyst's count-elimination undid)
-    df_t = tf_q.groupBy("token").agg(F.count_if(F.col("tf") > 0)
-                                     .alias("df"))
-    idf = F.log(F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5))
-    denom = F.col("tf") + k1 * (1.0 - b
-                                + b * F.col("dl") / F.col("avgdl"))
-    scored = (tf_q.join(F.broadcast(df_t), "token")
-              .join(dl, id_col)
-              .crossJoin(F.broadcast(stats))
-              .withColumn("__s", idf * F.col("tf") / denom)
-              .groupBy(id_col)
-              .agg(F.round(F.sum("__s") + ROUND_EPS, 5).alias("score")))
+    i = _q(id_col, True)
+    terms = list(dict.fromkeys(terms))
+    tfs = [f"tf{j}" for j in range(len(terms))]
+    per_doc = (tokens(docs.where(f"{i} IS NOT NULL"), id_col, text_col)
+               .groupBy(id_col)
+               .agg(*map(F.expr, ["count(1) AS dl"] + [
+                   f"count_if(token = {_q(term)}) AS {tf}"
+                   for term, tf in zip(terms, tfs)])))
+    # count_if(dl > 0) == count(*) (dl >= 1) but keeps every column of
+    # the per-doc table live, so this copy of its subtree stays the
+    # scorer's and the token exchange is read, not re-run (plain
+    # count(*) lets Catalyst prune the copy into a distinct aggregate
+    # with its own token pass; r16 plan audit)
+    stats = per_doc.selectExpr(
+        "count_if(dl > 0) AS n_docs", "avg(dl) AS avgdl",
+        *[f"count_if({tf} > 0) AS d{tf}" for tf in tfs])
+    k1, b = float(k1), float(b)
+    norm = f"{k1!r}D * (1.0D - {b!r}D + {b!r}D * dl / avgdl)"
+    score = " + ".join(
+        f"IF({tf} > 0, ln(1.0D + (n_docs - d{tf} + 0.5D) / (d{tf} + 0.5D))"
+        f" * {tf} / ({tf} + {norm}), 0.0D)" for tf in tfs) or "0.0D"
+    match = " OR ".join(f"{tf} > 0" for tf in tfs) or "false"
     # global top-k: TakeOrderedAndProject (distributed partial top-k),
     # then rank derived WITHOUT a window — collect the <=k survivors
     # into one array-sorted row and posexplode, so no unpartitioned
     # WindowExec appears anywhere in the plan
-    topk = scored.orderBy(F.col("score").desc(), F.col(id_col).asc()) \
-        .limit(k)
-    ordered = F.struct((-F.col("score")).alias("_neg"),
-                       F.col(id_col).alias(id_col),
-                       F.col("score").alias("score"))
-    return (topk.agg(F.array_sort(F.collect_list(ordered)).alias("_a"))
-            .select(F.posexplode("_a").alias("_pos", "_r"))
-            .select(F.col(f"_r.{id_col}").alias(id_col),
-                    F.col("_r.score").alias("score"),
-                    (F.col("_pos") + 1).alias("rank")))
+    return (per_doc.where(match).crossJoin(F.broadcast(stats))
+            .selectExpr(i, f"round({score} + {ROUND_EPS!r}D, 5) AS score")
+            .orderBy(F.desc("score"), F.expr(i).asc()).limit(k)
+            .selectExpr(f"array_sort(collect_list(struct(-score AS _neg, "
+                        f"{i} AS {i}, score AS score))) AS _a")
+            .selectExpr("posexplode(_a) AS (_pos, _r)")
+            .selectExpr(f"_r.{i} AS {i}", "_r.score AS score",
+                        "_pos + 1 AS `rank`"))
 
 
 def token_frequencies(docs: DataFrame, k: int = 50,
@@ -377,8 +371,7 @@ def repetition_scores(docs: DataFrame, ngram: int = 2,
 
 
 def lang_quality(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text",
-                 carry_cols: tuple[str, ...] = ()) -> DataFrame:
+                 text_col: str = "text") -> DataFrame:
     """lang_id + quality_scores fused into ONE token pass.
 
     (doc_id, pred_lang, quality_score, n_tokens) from a single
@@ -386,45 +379,32 @@ def lang_quality(docs: DataFrame, id_col: str = "doc_id",
     the token-table scan is its dominant cost at 100 TB — running the
     language and quality aggregates in the same shuffle halves it.
     Semantics identical to lang_id() + quality_scores() joined on id.
-
-    ``carry_cols``: extra per-document columns (functionally dependent
-    on the id) threaded through the groupBy and returned — lets a
-    caller fuse its own per-doc keys (e.g. a content digest) into this
-    pass instead of re-scanning the corpus for them.
     """
-    # work_factor 3: the fused pass runs 9 partial aggregates plus the
-    # carried digest md5 map-side — measured 0.47 s single-task vs
-    # 0.18 s for plain tokenize over the same sf0.1 file (r15)
-    t = tokens(docs.select(id_col, text_col, *carry_cols),
-               id_col, text_col, extra_cols=carry_cols,
+    # work_factor 3: the fused pass runs 9 partial aggregates map-side —
+    # measured 0.47 s single-task vs 0.18 s for plain tokenize over the
+    # same sf0.1 file (r15)
+    i = _q(id_col, True)
+    t = tokens(docs.selectExpr(i, _q(text_col, True)), id_col, text_col,
                work_factor=3.0)
-    stop = F.col("token").isin(STOPWORDS).cast("long")
-    alpha_chars = F.length(F.regexp_replace("token", "[^a-zA-Z]", ""))
-    hit_cols = [
-        F.sum(F.col("token").isin(m).cast("long")).alias(f"hits_{lang}")
-        for lang, m in sorted(LANG_MARKERS.items())
-    ]
-    agg = (t.groupBy(id_col, *carry_cols)
-           .agg(F.count("*").alias("n_tokens"),
-                F.avg(stop).alias("stopword_ratio"),
-                (F.sum(alpha_chars) / F.sum(F.length("token")))
-                .alias("alpha_ratio"),
-                F.avg(F.length("token")).alias("mean_token_len"),
-                *hit_cols))
     langs = sorted(LANG_MARKERS)
-    best = F.greatest(*[F.col(f"hits_{lang}") for lang in langs])
-    pred = F.coalesce(
-        *[F.when(F.col(f"hits_{lang}") == best, F.lit(lang))
-          for lang in langs])
-    score = (
-        F.least(F.col("n_tokens") / 100.0, F.lit(1.0)) * 0.4
-        + F.col("stopword_ratio") * 0.2
-        + F.col("alpha_ratio") * 0.3
-        + F.least(F.col("mean_token_len") / 10.0, F.lit(1.0)) * 0.1
-    )
-    return agg.select(
-        id_col, *carry_cols, pred.alias("pred_lang"),
-        F.round(score + ROUND_EPS, 5).alias("quality_score"), "n_tokens")
+    agg = t.groupBy(id_col).agg(*map(F.expr, [
+        "count(1) AS n_tokens",
+        f"avg(CAST({_in('token', STOPWORDS)} AS BIGINT)) "
+        "AS stopword_ratio",
+        "sum(length(regexp_replace(token, '[^a-zA-Z]', ''))) "
+        "/ sum(length(token)) AS alpha_ratio",
+        "avg(length(token)) AS mean_token_len",
+        *[f"sum(CAST({_in('token', LANG_MARKERS[lang])} AS BIGINT)) "
+          f"AS hits_{lang}" for lang in langs]]))
+    best = f"greatest({', '.join(f'hits_{lang}' for lang in langs)})"
+    pred = ", ".join(f"CASE WHEN hits_{lang} = {best} THEN {_q(lang)} END"
+                     for lang in langs)
+    score = ("least(n_tokens / 100.0D, 1.0D) * 0.4D"
+             " + stopword_ratio * 0.2D + alpha_ratio * 0.3D"
+             " + least(mean_token_len / 10.0D, 1.0D) * 0.1D")
+    return agg.selectExpr(
+        i, f"coalesce({pred}) AS pred_lang",
+        f"round({score} + {ROUND_EPS!r}D, 5) AS quality_score", "n_tokens")
 
 
 def winnow_fingerprints(docs: DataFrame, shingle_n: int = 3,

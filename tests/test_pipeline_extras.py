@@ -73,6 +73,78 @@ def test_connected_components_local_gate_equivalence(spark):
     assert (5, 1) in loc and (11, 10) in loc and (20, 20) in loc
 
 
+def test_connected_components_gate_decides_again_after_overwrite(
+        spark, tmp_path):
+    """The small-graph gate counts the pairs of THIS call: overwriting
+    the parquet path with a pair list on the other side of
+    ``local_threshold`` must switch the path taken (single-task
+    union-find <-> distributed loop), with the same labels."""
+    import pandas as pd
+
+    from conftest import plan_text
+    path = str(tmp_path / "pairs.parquet")
+
+    def run(n_pairs):
+        pd.DataFrame({"a": range(n_pairs),
+                      "b": range(1, n_pairs + 1)}).to_parquet(path)
+        out = dedup.connected_components(spark.read.parquet(path),
+                                         local_threshold=5)
+        labels = {(r["node"], r["component"]) for r in out.collect()}
+        assert labels == {(i, 0) for i in range(n_pairs + 1)}
+        return "MapInPandas" in plan_text(out)
+
+    assert run(3)                 # 3 pairs <= 5: single-task union-find
+    assert not run(8)             # same path, 8 pairs: distributed
+    assert run(2)
+
+
+def test_sql_quoting_of_caller_names_and_values(spark):
+    """Caller-supplied names and values reach the SQL expression strings
+    only through ``dedup._q``: an id column with a space, BM25 terms
+    with a quote and a backslash, and a language list with a quote."""
+    import math
+    from cross_modal_multivector_search_spark.operators.dedup import _q
+    assert _q("it's") == "'it\\'s'"
+    assert _q("a\\b") == "'a\\\\b'"
+    assert _q("doc id", ident=True) == "`doc id`"
+    assert _q("x`y", ident=True) == "`x``y`"
+    rows = [(1, "it's a\\b data here"), (2, "it's it's filler words"),
+            (3, "a\\b"), (4, "plain words only"), (5, "ab its")]
+    d = spark.createDataFrame(rows, "`doc id` long, `the text` string")
+    plain = d.withColumnRenamed("doc id", "doc_id") \
+        .withColumnRenamed("the text", "text")
+    terms = ["it's", "a\\b"]
+    got = text.bm25_rank(d, terms, id_col="doc id", text_col="the text")
+    assert got.columns == ["doc id", "score", "rank"]
+    # closed form over whitespace tokens
+    toks = {i: t.split() for i, t in rows}
+    n, avgdl = len(toks), sum(map(len, toks.values())) / len(toks)
+    df = {t: sum(t in v for v in toks.values()) for t in terms}
+    want = {}
+    for i, ts in toks.items():
+        s = sum(math.log(1 + (n - df[t] + 0.5) / (df[t] + 0.5))
+                * ts.count(t)
+                / (ts.count(t) + 1.2 * (0.25 + 0.75 * len(ts) / avgdl))
+                for t in terms)
+        if s:
+            want[i] = round(s + text.ROUND_EPS, 5)
+    assert {r["doc id"]: r["score"] for r in got.collect()} == \
+        pytest.approx(want)
+    assert set(want) == {1, 2, 3}
+    # the same names through curation, tf-idf and the language list
+    named = dict(id_col="doc id", text_col="the text")
+    for build in (
+            lambda df, **kw: curation.curate_corpus(
+                df, quality_threshold=0.0, langs=("en", "it's"), **kw),
+            lambda df, **kw: text.tfidf_top_terms(df, k=2, **kw),
+            lambda df, **kw: text.lang_quality(df, **kw)):
+        a = build(d, **named).toPandas()
+        b = build(plain).toPandas().rename(columns={"doc_id": "doc id"})
+        assert list(a.columns) == list(b.columns)
+        assert a.sort_values(list(a.columns)).reset_index(drop=True) \
+            .equals(b.sort_values(list(b.columns)).reset_index(drop=True))
+
+
 def test_curate_corpus_planted(spark):
     """Exact dup -> keep min id; German and junk docs filtered; clean
     English doc survives with its features."""

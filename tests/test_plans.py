@@ -94,6 +94,71 @@ def test_bm25_global_topk_distributed(spark):
     assert "Window" not in text
 
 
+def test_bm25_reads_token_exchange_once(spark):
+    """BM25 scores from ONE token pass: the per-doc (dl, tf per term)
+    exchange feeds both the scorer and the broadcast corpus stats, so
+    the executed plan scans the documents once and reuses the exchange
+    (two scans = a second tokenize+shuffle of the whole corpus)."""
+    from cross_modal_multivector_search_spark import testdata as TD
+    from cross_modal_multivector_search_spark.operators import text
+    df = text.bm25_rank(TD.load(spark, SF_SMOKE, "documents"),
+                        ["data", "search", "model"], 20)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, final
+    assert "ReusedExchange" in final
+    assert final.count("Generate posexplode(filter(split(") == 1
+
+
+# py4j commands (all but `m` GC releases) the driver thread sent while
+# each plan was built when every expression was a nested F.*/Column
+# chain — measured with _py4j_commands on the sf0.01 documents
+_COLUMN_CHAIN_COMMANDS = {"minhash_lsh_pairs": 1279, "lang_quality": 1064,
+                          "tfidf_top_terms": 521, "bm25_rank": 1001}
+
+
+def _py4j_commands(build) -> int:
+    import threading
+
+    import py4j.clientserver as cs
+    send, me, n = cs.ClientServerConnection.send_command, \
+        threading.get_ident(), [0]
+
+    def counting(self, command, *a, **kw):
+        if threading.get_ident() == me and not command.startswith("m"):
+            n[0] += 1
+        return send(self, command, *a, **kw)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        cs.ClientServerConnection.send_command = send
+    return n[0]
+
+
+def test_operator_plans_build_in_few_py4j_commands(spark):
+    """Driver canary: the curation and text plans are SQL expression
+    strings (one JVM call each); a regression to Column chains triples
+    their py4j round trips and their driver-only build time."""
+    from cross_modal_multivector_search_spark import testdata as TD
+    from cross_modal_multivector_search_spark.operators import dedup, text
+    docs = TD.load(spark, SF_SMOKE, "documents")
+    builds = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(
+            docs, 8, 4, 3, dedup_pairs=False),
+        "lang_quality": lambda: text.lang_quality(docs),
+        "tfidf_top_terms": lambda: text.tfidf_top_terms(docs, k=5),
+        "bm25_rank": lambda: text.bm25_rank(
+            docs, ["data", "search", "model"], 20),
+    }
+    for name, build in builds.items():
+        build()                                   # imports, first calls
+        n = _py4j_commands(build)
+        assert 0 < n <= _COLUMN_CHAIN_COMMANDS[name] / 3, (name, n)
+
+
 def test_ivf_centroids_single_shuffle(spark):
     """Centroid build must be ONE exchange (dim scalar partial aggs),
     not posexplode + two groupBys."""

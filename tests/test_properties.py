@@ -1,8 +1,12 @@
-"""Property-based tests (hypothesis) for the NumPy core.
+"""Property-based tests (hypothesis) for the NumPy core and the
+curation/text operators.
 
 The reference has no property testing (SURVEY §5); these pin the
-invariants the distributed operators rely on.
+invariants the distributed operators rely on, and hold the curation,
+tf-idf and BM25 operators to their DuckDB twins on adversarial shards.
 """
+
+import itertools
 
 import numpy as np
 import pytest
@@ -271,3 +275,114 @@ def test_batch_search_non_adaptive_respects_per_set_max_pq(seed):
             assert len(bi) <= int(max_pqs[qi])
             assert np.array_equal(si, bi)
             assert np.allclose(sd, bd, atol=1e-12)
+
+
+# adversarial document shards: empty / whitespace-only / one-token
+# texts, es-de-fr marker ties ("la" is es and fr), exact and near
+# duplicates, and a vocabulary that may lack any of the BM25 terms
+_WORDS = ["data", "search", "model", "the", "a", "of", "and", "to",
+          "el", "la", "de", "los", "que", "der", "die", "und", "das",
+          "ist", "le", "les", "et", "des", "zebra", "river", "x1", "@@",
+          "12345", "Data"]
+
+
+@st.composite
+def shards(draw):
+    vocab = draw(st.lists(st.sampled_from(_WORDS), min_size=1,
+                          unique=True))
+    # an English-heavy shard, so some documents pass the quality cut
+    heavy = ["the", "of", "and"] if draw(st.booleans()) else []
+    words = st.lists(st.sampled_from(vocab + heavy), min_size=1,
+                     max_size=24)
+    sep = st.sampled_from([" ", "  ", "\t", "\n", " \n "])
+    texts: list[str] = []
+    for _ in range(draw(st.integers(1, 9))):
+        kind = draw(st.sampled_from(
+            ["words", "words", "blank", "single", "dup", "near"]))
+        if kind == "blank":
+            texts.append(draw(st.sampled_from(["", " ", "\t \n"])))
+        elif kind == "single":
+            texts.append(draw(st.sampled_from(vocab)))
+        elif kind in ("dup", "near") and texts:
+            base = draw(st.sampled_from(texts))
+            texts.append(base if kind == "dup" else
+                         base + " " + draw(st.sampled_from(vocab)))
+        else:
+            ws = draw(words)
+            texts.append("".join(w + draw(sep) for w in ws[:-1]) + ws[-1])
+    ids = draw(st.lists(st.integers(0, 10 ** 6), min_size=len(texts),
+                        max_size=len(texts), unique=True))
+    return ids, texts
+
+
+@pytest.fixture(scope="module")
+def shard_dir(tmp_path_factory):
+    return tmp_path_factory.mktemp("shards")
+
+
+_SHARD_SEQ = itertools.count()
+
+
+def _shard(spark, shard_dir, case):
+    import pandas as pd
+    ids, texts = case
+    path = str(shard_dir / f"docs{next(_SHARD_SEQ)}.parquet")
+    pdf = pd.DataFrame({"doc_id": pd.array(ids, dtype="int64"),
+                        "text": texts})
+    pdf.to_parquet(path)
+    return spark.read.parquet(path), pdf
+
+
+def _canon(df):
+    df = df[sorted(df.columns)].copy()
+    for c in df.columns:
+        if df[c].dtype.kind == "f":
+            df[c] = df[c].round(6)
+        elif df[c].dtype.kind in "iu":
+            df[c] = df[c].astype("int64")
+    return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+@given(shards())
+@settings(max_examples=12, deadline=None)
+def test_curation_and_text_operators_equal_duckdb_twins(spark, shard_dir,
+                                                        case):
+    """curate_corpus, tfidf_top_terms and bm25_rank == their DuckDB
+    oracle twins (same SQL the oracle gate runs) on adversarial shards."""
+    import duckdb
+
+    import __spark_entry__ as E
+    from cross_modal_multivector_search_spark.operators import (
+        curation, text,
+    )
+    docs, pdf = _shard(spark, shard_dir, case)
+    got = [curation.curate_corpus(docs, quality_threshold=0.5,
+                                  langs=("en",), num_hashes=8, bands=4,
+                                  shingle_n=3),
+           text.tfidf_top_terms(docs, k=5),
+           text.bm25_rank(docs, ["data", "search", "model"], 20)]
+    con = duckdb.connect()
+    try:
+        con.register("documents", pdf)
+        want = [con.execute(q).df() for q in (
+            E.SQL_CORPUS_CURATE, E.SQL_TFIDF_TOP_TERMS, E.SQL_BM25_RANK)]
+    finally:
+        con.close()
+    for g, w in zip(got, want):
+        g = g.toPandas()
+        assert sorted(g.columns) == sorted(w.columns)
+        assert _canon(g).equals(_canon(w)), (g, w)
+
+
+@given(shards())
+@settings(max_examples=6, deadline=None)
+def test_bm25_repeated_and_empty_terms(spark, shard_dir, case):
+    """A repeated query term counts once; no terms returns no rows (with
+    the same schema)."""
+    from cross_modal_multivector_search_spark.operators import text
+    docs, _ = _shard(spark, shard_dir, case)
+    once = text.bm25_rank(docs, ["data"])
+    twice = text.bm25_rank(docs, ["data", "data"])
+    assert twice.collect() == once.collect()
+    none = text.bm25_rank(docs, [])
+    assert none.schema == once.schema and none.collect() == []
