@@ -837,13 +837,7 @@ def _sharded_work(spark: SparkSession, sf_dir: str) -> DataFrame:
         knn = sharded.shard_self_knn(base, N_SHARDS, p.m_sq)
         sharded.build_sharded(base, N_SHARDS, p, train_knn=knn) \
             .write.mode("overwrite").parquet(cache)
-    # shard x query-block sub-partitions (prepare_search_work
-    # query_blocks=) were implemented for VERDICT r15 #5 and A/B'd:
-    # at this sf the per-set search (budget 100, ~5 ms/set) is smaller
-    # than the widened fan-out's per-task overhead (32 tasks at 0.51 s
-    # min vs 4 tasks at 0.44 s; wash at budget 1000), so the bench
-    # layout stays at 1 block — flip query_blocks on when per-set
-    # search dominates per-task assembly (big shards, deep budgets).
+    # one search task per shard: N_SHARDS already fills the cores
     work = sharded.prepare_search_work(
         spark.read.parquet(cache), v.select("vec_id", "vec"),
         N_SHARDS).cache()
@@ -859,8 +853,8 @@ def q_ann_sharded_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = TD.embeddings_norm(spark, sf_dir)
     q = v.filter(F.col("set_id") < TD.N_QUERY_SETS)
     cands = sharded.search_sharded(
-        None, v.select("vec_id", "vec"), _qsets("fixed", sf_dir, q),
-        min_pq=5, max_pq=100, budget=100, n_shards=N_SHARDS, work=work)
+        work, _qsets("fixed", sf_dir, q), min_pq=5, max_pq=100,
+        budget=100)
     out = rerank.rerank(cands.select("query_set_id", "base_vec_id"),
                         q, v, K, m=M, q_sets=_qsets("fixed", sf_dir, q))
     return _r(out, "score").withColumn("rank", F.col("rank").cast("long"))
@@ -1135,7 +1129,7 @@ def _hnsw_sharded_work(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(cache):
         hnsw.build_hnsw_sharded(v.select("vec_id", "vec"), N_SHARDS, p) \
             .write.mode("overwrite").parquet(cache)
-    work = hnsw.prepare_hnsw_work(
+    work = sharded.prepare_search_work(
         spark.read.parquet(cache), v.select("vec_id", "vec"),
         N_SHARDS).cache()
     work.count()

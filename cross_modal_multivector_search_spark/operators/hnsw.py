@@ -51,6 +51,7 @@ from .graph_build import _collect_matrix, _RecordedSource, _ship_array
 from .graph_search import (_CAND_SCHEMA, _cand_frame, _search_grouped,
                            _search_then_rerank)
 from .set_search import fetch_grouped_sets
+from .sharded import _matrix, _shard_runs, _with_shard
 
 _LEVEL_GRAPH_SCHEMA = StructType([
     StructField("level", IntegerType()),
@@ -723,149 +724,58 @@ def build_hnsw_sharded(base: DataFrame, n_shards: int,
     Hash(id) % n_shards by default (uniform, no skew); ``shard_col``
     accepts a precomputed assignment (e.g. ``sharded.spatial_shards``)
     for routable sub-indexes. One sequential insert pipeline per shard,
-    S-way parallel, zero cross-shard traffic."""
+    S-way parallel, zero cross-shard traffic. Prepare the search-ready
+    layout with ``sharded.prepare_search_work``."""
     from .partitioning import repartition_by_shard
-    from .sharded import _shard_expr
     bc_params = (params.m, params.ef_construction, params.seed)
 
     def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur, ids_acc, vec_acc = None, [], []
+        for shard, rows in _shard_runs(it):
+            ids = rows[id_col].to_numpy(dtype=np.int64)
+            levels, adj, entry, top = _hnsw_insert_pipeline(
+                _matrix(rows[vec_col]), HnswParams(*bc_params))
+            pdf = pd.DataFrame(_graph_rows(ids, levels, adj, entry, top))
+            pdf.insert(0, "shard", np.full(len(pdf), shard, dtype=np.int32))
+            yield pdf
 
-        def emit(shard, ids_l, vecs_l):
-            ids = np.array(ids_l, dtype=np.int64)
-            vecs = np.vstack(vecs_l).astype(np.float64)
-            p = HnswParams(*bc_params)
-            levels, adj, entry, top = _hnsw_insert_pipeline(vecs, p)
-            rows = _graph_rows(ids, levels, adj, entry, top)
-            pdf = pd.DataFrame(rows)
-            pdf.insert(0, "shard", np.full(len(pdf), int(shard),
-                                           dtype=np.int32))
-            return pdf
-
-        for pdf in it:
-            for shard, vid, vec in zip(pdf["shard"], pdf[id_col],
-                                       pdf[vec_col]):
-                if cur is not None and shard != cur:
-                    yield emit(cur, ids_acc, vec_acc)
-                    ids_acc, vec_acc = [], []
-                cur = shard
-                ids_acc.append(int(vid))
-                vec_acc.append(np.asarray(vec, dtype=np.float64))
-        if ids_acc:
-            yield emit(cur, ids_acc, vec_acc)
-
-    if shard_col is None:
-        sharded_b = base.withColumn("shard", _shard_expr(id_col, n_shards))
-    else:
-        sharded_b = base.withColumn("shard", F.col(shard_col).cast("int"))
-    return (repartition_by_shard(sharded_b, n_shards, "shard")
+    return (repartition_by_shard(
+                _with_shard(base, n_shards, id_col, shard_col), n_shards,
+                "shard")
             .sortWithinPartitions("shard", id_col)
             .mapInPandas(build, schema=_SHARD_LEVEL_GRAPH_SCHEMA))
-
-
-def prepare_hnsw_work(shard_graph: DataFrame, base: DataFrame,
-                      n_shards: int, id_col: str = "vec_id",
-                      vec_col: str = "vec",
-                      shard_col: str | None = None,
-                      query_blocks: int = 1) -> DataFrame:
-    """Join the per-level shard adjacency to its vectors, grouped+sorted
-    by shard — the search-ready layout (cache() for build-once /
-    search-many). A node appearing on L levels repeats its vector L
-    times; levels above 0 hold <1/m of the nodes, so the overhead is
-    a few percent and the search task needs no second join.
-    ``query_blocks``: sub-partitions per shard (see
-    ``sharded.prepare_search_work`` — uncaps the search fan-out when
-    shards < cores; block b searches sets with set_id % blocks == b)."""
-    from .partitioning import repartition_by_shard
-    from .sharded import _shard_expr
-    if shard_col is not None:
-        vecs_sharded = base.withColumn("shard",
-                                       F.col(shard_col).cast("int"))
-    else:
-        vecs_sharded = base.withColumn("shard",
-                                       _shard_expr(id_col, n_shards))
-    joined = shard_graph.join(
-        vecs_sharded.select("shard", F.col(id_col).alias("src"),
-                            F.col(vec_col).alias("v")),
-        ["shard", "src"])
-    qb = max(1, int(query_blocks))
-    if qb == 1:
-        return repartition_by_shard(joined, n_shards, "shard") \
-            .sortWithinPartitions("shard", "level", "src")
-    expl = joined.withColumn(
-        "_qblock",
-        F.explode(F.array(*[F.lit(i) for i in range(qb)])))
-    expl = expl.withColumn("_qblocks", F.lit(qb)).withColumn(
-        "_spart", F.col("shard").cast("int") * qb + F.col("_qblock"))
-    return (repartition_by_shard(expl, n_shards * qb, "_spart")
-            .drop("_spart")
-            .sortWithinPartitions("shard", "_qblock", "level", "src"))
 
 
 def search_hnsw_sharded(work: DataFrame, query_vecs: DataFrame,
                         budget: int, set_id: str = "set_id",
                         vec_id: str = "vec_id",
                         vec_col: str = "vec") -> DataFrame:
-    """Fan-out fixed-split search over the per-shard sub-indexes:
-    every shard searches every member with ef = budget/m; the global
-    merge keeps each member's best ef candidates across shards (the
-    multi-index analog of `searchKnn` + result heap union). Candidates
-    feed the same reranker."""
+    """Fan-out fixed-split search over the per-shard sub-indexes
+    (``work``: ``sharded.prepare_search_work``'s layout): every shard
+    searches every member with ef = budget/m; the global merge keeps
+    each member's best ef candidates across shards (the multi-index
+    analog of `searchKnn` + result heap union). Candidates feed the
+    same reranker."""
     spark = query_vecs.sparkSession
     q_sets = fetch_grouped_sets(query_vecs, set_id, vec_id, vec_col)
     bc_q = spark.sparkContext.broadcast((q_sets, budget))
 
-    blocked = "_qblock" in work.columns
-
     def search(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_sets_l, budget_l = bc_q.value
-        cur = None
-        rows_acc: list[tuple] = []
-        blk_state = [0, 1]          # (block, n_blocks) of rows_acc
-
-        def run_shard():
-            ids_order = []           # contiguous local ids, level-0 order
-            ix: dict[int, int] = {}
-            for lvl, src, nbrs, is_ep, v in rows_acc:
-                if lvl == 0:
-                    ix[int(src)] = len(ids_order)
-                    ids_order.append((int(src), v))
-            ids = np.array([s for s, _ in ids_order], dtype=np.int64)
-            vecs = np.vstack([np.asarray(v, dtype=np.float64)
-                              for _, v in ids_order])
+        for _, rows in _shard_runs(it):
+            # local ids in level-0 row order (rows arrive sorted by src)
+            lvl0 = rows[rows["level"].to_numpy() == 0]
+            ids = lvl0["src"].to_numpy(dtype=np.int64)
+            ix = {int(v): i for i, v in enumerate(ids)}
             adj, levels, entry, max_level = _assemble_adj(
-                ((lvl, src, nbrs, is_ep)
-                 for lvl, src, nbrs, is_ep, _ in rows_acc),
-                ix, len(ids))
-            idx = HnswIndex(ids=ids, vecs=vecs, levels=levels, adj=adj,
-                            entry_point=entry, max_level=max_level)
-            blk, nblk = blk_state
-            sel = [(qsid, qmat) for qsid, qmat in q_sets_l
-                   if qsid % nblk == blk]
-            return _cand_frame(
-                [qsid for qsid, _ in sel],
-                _fixed_split_search(idx, [qmat for _, qmat in sel],
+                zip(rows["level"], rows["src"], rows["nbrs"],
+                    rows["is_entry"]), ix, len(ids))
+            idx = HnswIndex(ids=ids, vecs=_matrix(lvl0["v"]),
+                            levels=levels, adj=adj, entry_point=entry,
+                            max_level=max_level)
+            out = _cand_frame(
+                [qsid for qsid, _ in q_sets_l],
+                _fixed_split_search(idx, [qmat for _, qmat in q_sets_l],
                                     budget_l), ids)
-
-        for pdf in it:
-            qbs = pdf["_qblock"] if blocked else np.zeros(len(pdf),
-                                                          dtype=np.int64)
-            nqb = pdf["_qblocks"] if blocked else np.ones(len(pdf),
-                                                          dtype=np.int64)
-            for shard, qb, nb, lvl, src, nbrs, is_ep, v in zip(
-                    pdf["shard"], qbs, nqb, pdf["level"], pdf["src"],
-                    pdf["nbrs"], pdf["is_entry"], pdf["v"]):
-                key = (int(shard), int(qb), int(nb))
-                if cur is not None and key != cur:
-                    out = run_shard()
-                    if out is not None:
-                        yield out
-                    rows_acc = []
-                cur = key
-                blk_state[0], blk_state[1] = int(qb), int(nb)
-                rows_acc.append((int(lvl), src, nbrs, is_ep, v))
-        if rows_acc:
-            out = run_shard()
             if out is not None:
                 yield out
 

@@ -4,9 +4,10 @@ A single RoarGraph broadcast caps out at executor memory (a few GB ≈
 tens of millions of vectors). Above that:
 
   build:   hash-shard the base table; ONE Spark task builds ONE shard's
-           sub-index (applyInPandas over groupBy(shard)) — the build
-           fans out S-way with no cross-shard traffic at all, and each
-           sub-index is persisted as its shard's adjacency rows.
+           sub-index (one partition per shard, read shard by shard
+           through ``_shard_runs``) — the build fans out S-way with no
+           cross-shard traffic at all, and each sub-index is persisted
+           as its shard's adjacency rows.
   search:  queries broadcast to every shard partition; each shard task
            runs the multi-vector beam search against its local sub-index
            and emits only its top candidates; a global per-query top-k
@@ -159,6 +160,44 @@ def _shard_expr(col: str, n_shards: int):
     return F.pmod(F.hash(F.col(col)), F.lit(n_shards)).cast("int")
 
 
+def _with_shard(base: DataFrame, n_shards: int, id_col: str,
+                shard_col: str | None) -> DataFrame:
+    """``base`` plus the int ``shard`` column: ``shard_col``'s
+    precomputed assignment (spatial sharding), else hash(id) %
+    n_shards."""
+    return base.withColumn(
+        "shard", _shard_expr(id_col, n_shards) if shard_col is None
+        else F.col(shard_col).cast("int"))
+
+
+def _shard_runs(batches: Iterator[pd.DataFrame]
+                ) -> Iterator[tuple[int, pd.DataFrame]]:
+    """(shard id, rows) for each run of equal ``shard`` values in one
+    partition's batches. Every sharded stage sorts its partitions by
+    shard first, so each run is one whole shard, also when it spans
+    Arrow batches."""
+    cur, parts = None, []
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        sh = pdf["shard"].to_numpy()
+        cuts = [0, *(np.flatnonzero(sh[1:] != sh[:-1]) + 1).tolist(),
+                len(sh)]
+        for s, e in zip(cuts[:-1], cuts[1:]):
+            if parts and sh[s] != cur:
+                yield int(cur), pd.concat(parts, ignore_index=True)
+                parts = []
+            cur = sh[s]
+            parts.append(pdf.iloc[s:e])
+    if parts:
+        yield int(cur), pd.concat(parts, ignore_index=True)
+
+
+def _matrix(col: pd.Series) -> np.ndarray:
+    """One float64 matrix from a column of equal-length vectors."""
+    return np.vstack(col.to_numpy()).astype(np.float64)
+
+
 def shard_self_knn(base: DataFrame, n_shards: int, k: int,
                    id_col: str = "vec_id",
                    vec_col: str = "vec",
@@ -195,22 +234,16 @@ def shard_self_knn(base: DataFrame, n_shards: int, k: int,
     ])
 
     def per_shard(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # rows arrive grouped+sorted by shard (repartition +
-        # sortWithinPartitions); accumulate one shard at a time — the
-        # same streaming pattern as build_sharded
-        cur, ids_acc, vec_acc = None, [], []
+        from .brute_force import topk_cols_ascending
 
-        def emit():
-            from .brute_force import topk_cols_ascending
-
-            ids = np.array(ids_acc, dtype=np.int64)
+        for _, rows in _shard_runs(it):
+            ids = rows[id_col].to_numpy(dtype=np.int64)
             n = len(ids)
             kk = min(kk_cap, n - 1)
             if kk <= 0:
-                return None
-            mat = np.vstack(vec_acc).astype(np.float64)
+                continue
+            mat = _matrix(rows[vec_col])
             blk = max(1, int(block_bytes / (8 * n)))
-            frames = []
             for s in range(0, n, blk):
                 # negated IP, ascending = closest — the same sign dance
                 # as knn_exact_gemm, so scores are bit-identical to the
@@ -218,39 +251,21 @@ def shard_self_knn(base: DataFrame, n_shards: int, k: int,
                 sims = -(mat[s:s + blk] @ mat.T)
                 sims[ids[s:s + blk, None] == ids[None, :]] = np.inf
                 order = topk_cols_ascending(sims, ids, kk)
-                rows = np.repeat(np.arange(sims.shape[0]), kk)
+                rows_q = np.repeat(np.arange(sims.shape[0]), kk)
                 cols = order.ravel()
-                frames.append(pd.DataFrame({
-                    "query_id": ids[s:s + blk][rows],
+                yield pd.DataFrame({
+                    "query_id": ids[s:s + blk][rows_q],
                     "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32),
                                     sims.shape[0]),
                     "base_id": ids[cols],
-                    "score": -sims[rows, cols],
-                }))
-            return pd.concat(frames) if frames else None
-
-        for pdf in it:
-            for shard, vid, vec in zip(pdf["_shard"], pdf[id_col],
-                                       pdf[vec_col]):
-                if cur is not None and shard != cur:
-                    out = emit()
-                    if out is not None:
-                        yield out
-                    ids_acc, vec_acc = [], []
-                cur = shard
-                ids_acc.append(int(vid))
-                vec_acc.append(np.asarray(vec, dtype=np.float64))
-        if ids_acc:
-            out = emit()
-            if out is not None:
-                yield out
+                    "score": -sims[rows_q, cols],
+                })
 
     from .partitioning import repartition_by_shard
 
-    sel = base.select(F.col(id_col), vec_col,
-                      _shard_expr(id_col, n_shards).alias("_shard"))
-    return (repartition_by_shard(sel, n_shards, "_shard")
-            .sortWithinPartitions("_shard", id_col)
+    sel = _with_shard(base.select(id_col, vec_col), n_shards, id_col, None)
+    return (repartition_by_shard(sel, n_shards, "shard")
+            .sortWithinPartitions("shard", id_col)
             .mapInPandas(per_shard, schema=schema))
 
 
@@ -285,17 +300,13 @@ def build_sharded(base: DataFrame, n_shards: int,
     shape).
     """
     def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # applyInPandas-free: rows arrive grouped+sorted by shard via
-        # repartition+sortWithinPartitions; accumulate one shard at a time
-        cur_shard, ids_acc, vec_acc, nn_acc = None, [], [], []
-        with_nn = [False]
-
-        def emit(shard, ids_l, vecs_l, nn_l):
-            ids = np.array(ids_l, dtype=np.int64)
-            vecs = np.vstack(vecs_l).astype(np.float64)
+        for shard, rows in _shard_runs(it):
+            ids = rows[id_col].to_numpy(dtype=np.int64)
             adj, ep = _build_one_shard(
-                ids, vecs, params, nn_lists=nn_l if with_nn[0] else None)
-            return pd.DataFrame({
+                ids, _matrix(rows[vec_col]), params,
+                nn_lists=(rows["_nn"].to_numpy()
+                          if "_nn" in rows.columns else None))
+            yield pd.DataFrame({
                 "shard": np.full(len(ids), shard, dtype=np.int32),
                 "src": ids,
                 "nbrs": [[int(ids[j]) for j in adj[i]]
@@ -303,26 +314,7 @@ def build_sharded(base: DataFrame, n_shards: int,
                 "is_entry": [1 if i == ep else 0 for i in range(len(ids))],
             })
 
-        for pdf in it:
-            with_nn[0] = "_nn" in pdf.columns
-            nns = pdf["_nn"] if with_nn[0] else [None] * len(pdf)
-            for shard, vid, vec, nn in zip(pdf["shard"], pdf[id_col],
-                                           pdf[vec_col], nns):
-                if cur_shard is not None and shard != cur_shard:
-                    yield emit(cur_shard, ids_acc, vec_acc, nn_acc)
-                    ids_acc, vec_acc, nn_acc = [], [], []
-                cur_shard = shard
-                ids_acc.append(int(vid))
-                vec_acc.append(np.asarray(vec, dtype=np.float64))
-                nn_acc.append(nn)
-        if ids_acc:
-            yield emit(cur_shard, ids_acc, vec_acc, nn_acc)
-
-    if shard_col is None:
-        sharded = base.withColumn("shard", _shard_expr(id_col, n_shards))
-    else:
-        sharded = base.withColumn("shard",
-                                  F.col(shard_col).cast("int"))
+    sharded = _with_shard(base, n_shards, id_col, shard_col)
     if train_knn is not None:
         same = train_knn.filter(F.col("query_id") != F.col("base_id"))
         if shard_col is None:
@@ -341,76 +333,78 @@ def build_sharded(base: DataFrame, n_shards: int,
             .mapInPandas(build, schema=_SHARD_GRAPH_SCHEMA))
 
 
-def default_query_blocks(spark, n_shards: int) -> int:
-    """Sub-partitions per shard so the search fan-out fills the
-    cluster: ceil(parallelism / n_shards), 1 when shards alone already
-    do (the at-scale regime — hundreds of shards on hundreds of
-    cores)."""
-    dp = spark.sparkContext.defaultParallelism
-    return max(1, -(-dp // max(1, n_shards)))
-
-
 def prepare_search_work(shard_graph: DataFrame, base: DataFrame,
                         n_shards: int, vec_id: str = "vec_id",
                         vec_col: str = "vec",
-                        shard_col: str | None = None,
-                        query_blocks: int = 1) -> DataFrame:
+                        shard_col: str | None = None) -> DataFrame:
     """Join the shard adjacency to its vectors, grouped+sorted by shard —
-    the search-ready layout. Build-once / search-many callers should
-    cache() this and pass it to search_sharded(work=...) so repeated
-    searches skip the join+shuffle (the index is static between builds).
+    the search-ready layout of both graph kinds (``build_sharded`` rows,
+    and ``hnsw.build_hnsw_sharded`` rows whose ``level`` column rides
+    along). Build-once / search-many callers should cache() this and
+    pass it to ``search_sharded`` / ``hnsw.search_hnsw_sharded`` so
+    repeated searches skip the join+shuffle (the index is static
+    between builds).
 
     ``shard_col``: precomputed shard column on ``base`` (spatial
-    sharding) — must be the same assignment the graph was built with.
-
-    ``query_blocks`` (r16, VERDICT r15 #5): replicate each shard's rows
-    into that many sub-partitions, one (shard, block) per task, so the
-    search runs n_shards x query_blocks tasks — block b searches only
-    query sets with ``set_id % query_blocks == b``, every set still
-    meets every shard exactly once. This uncaps the fan-out when the
-    shard count under-fills the cluster (4 shards on 32 cores ran 4
-    tasks); at real shard counts (>= cores) the default of 1 replicates
-    nothing. Cost: the cached work layout holds ``query_blocks`` copies
-    of the graph — only pay it when shards < cores, which is exactly
-    when shards are small. Pass the SAME value to ``search_sharded``."""
-    if shard_col is not None:
-        vecs_sharded = base.withColumn("shard",
-                                       F.col(shard_col).cast("int"))
-    else:
-        vecs_sharded = base.withColumn(
-            "shard",
-            F.pmod(F.hash(F.col(vec_id)), F.lit(n_shards)).cast("int"))
+    sharding) — must be the same assignment the graph was built with."""
     from .partitioning import repartition_by_shard
 
+    vecs = _with_shard(base, n_shards, vec_id, shard_col)
     joined = shard_graph.join(
-        vecs_sharded.select("shard", F.col(vec_id).alias("src"),
-                            F.col(vec_col).alias("v")),
+        vecs.select("shard", F.col(vec_id).alias("src"),
+                    F.col(vec_col).alias("v")),
         ["shard", "src"])
-    qb = max(1, int(query_blocks))
-    if qb == 1:
-        return repartition_by_shard(joined, n_shards, "shard") \
-            .sortWithinPartitions("shard", "src")
-    expl = joined.withColumn(
-        "_qblock",
-        F.explode(F.array(*[F.lit(i) for i in range(qb)])))
-    expl = expl.withColumn("_qblocks", F.lit(qb)).withColumn(
-        "_spart", F.col("shard").cast("int") * qb + F.col("_qblock"))
-    return (repartition_by_shard(expl, n_shards * qb, "_spart")
-            .drop("_spart")
-            .sortWithinPartitions("shard", "_qblock", "src"))
+    return repartition_by_shard(joined, n_shards, "shard") \
+        .sortWithinPartitions("shard", "src")
 
 
-def search_sharded(shard_graph: DataFrame, base: DataFrame,
-                   query_vecs: DataFrame,
+def _assemble_shard(shard: int, src: np.ndarray, vecs: np.ndarray,
+                    offs: np.ndarray, nbr_ids: np.ndarray,
+                    is_entry: np.ndarray):
+    """(ids, adj, vecs, ep) of one shard's sub-index over local ids,
+    from its rows in arrival order: row i has vec_id ``src[i]``, vector
+    ``vecs[i]`` and neighbour vec_ids ``nbr_ids[offs[i]:offs[i + 1]]``.
+    Rows come out sorted by vec_id, so the global->local neighbour map
+    is one searchsorted over the flat neighbour buffer."""
+    order = (np.arange(len(src)) if bool(np.all(src[1:] >= src[:-1]))
+             else np.argsort(src, kind="stable"))
+    ids = src[order]
+    loc = np.searchsorted(ids, nbr_ids)
+    bad = (loc >= len(ids)) | (ids[np.minimum(loc, len(ids) - 1)]
+                               != nbr_ids)
+    if bad.any():
+        raise ValueError(
+            f"shard {shard} graph references vec_id "
+            f"{int(nbr_ids[np.flatnonzero(bad)[0]])}, which is not among "
+            "its vectors — was the work table prepared with the shard "
+            "assignment the graph was built with?")
+    adj = [loc[offs[o]:offs[o + 1]] for o in order]
+    eps = np.flatnonzero(is_entry[order])
+    return ids, adj, vecs[order], int(eps[0]) if len(eps) else 0
+
+
+def _search_shard(shard_index, sel: list, min_pq: int, max_pq: int,
+                  budget: int, adaptive: bool):
+    """Candidate rows of the (set id, member matrix) pairs ``sel``
+    against one assembled shard, in one wave-vectorized pass (exact twin
+    of the per-set loop, pinned by tests)."""
+    ids, adj, vecs, ep = shard_index
+    res = core.batch_multivector_search(
+        adj, vecs, [qmat for _, qmat in sel], ep, min_pq, max_pq, budget,
+        adaptive)
+    return _cand_frame([qsid for qsid, _ in sel], res, ids)
+
+
+def search_sharded(work: DataFrame, query_vecs: DataFrame,
                    min_pq: int, max_pq: int, budget: int,
-                   adaptive: bool = True, n_shards: int | None = None,
+                   adaptive: bool = True,
                    set_id: str = "set_id", vec_id: str = "vec_id",
                    vec_col: str = "vec",
-                   work: DataFrame | None = None,
                    routes: dict[int, frozenset] | None = None) -> DataFrame:
-    """Fan-out multi-vector search: every shard searches every query set
-    with the full per-shard budget; global merge keeps each member's
-    best candidates across shards (partial+final top-k).
+    """Fan-out multi-vector search over ``work`` (``prepare_search_work``'s
+    layout): every shard searches every query set with the full
+    per-shard budget; global merge keeps each member's best candidates
+    across shards (partial+final top-k).
 
     ``routes`` (query_set_id -> shard ids, from ``route_query_sets``)
     restricts each query to its routed shards: with spatial shards the
@@ -422,15 +416,8 @@ def search_sharded(shard_graph: DataFrame, base: DataFrame,
     ``query_vecs`` is a DataFrame, or a pre-fetched
     [(set_id, member matrix), ...] list (``set_search.
     fetch_grouped_sets`` shape) — search-many callers skip the
-    per-call grouped Arrow fetch.
-
-    When ``work`` was prepared with ``query_blocks`` > 1, each
-    (shard, block) task searches only its block's query sets
-    (``set_id % query_blocks == block``) — identical output, fan-out
-    n_shards x query_blocks tasks. The block count is read from the
-    work layout itself (the ``_qblock`` column), so it can never
-    disagree with how the work table was built."""
-    spark = base.sparkSession
+    per-call grouped Arrow fetch."""
+    spark = work.sparkSession
     if not isinstance(query_vecs, list):
         query_vecs = fetch_grouped_sets(query_vecs, set_id, vec_id, vec_col)
     q_sets = [(int(s), np.asarray(m, dtype=np.float64))
@@ -445,110 +432,34 @@ def search_sharded(shard_graph: DataFrame, base: DataFrame,
                 "entry in routes — routes must cover every searched "
                 "set (rebuild with route_query_sets on the same "
                 "queries)")
-    bc_q = spark.sparkContext.broadcast(
-        (q_sets, min_pq, max_pq, budget, adaptive, routes))
-
-    if work is None:
-        if n_shards is None:
-            # fallback inference — WRONG if the top hash shard is empty, so
-            # callers that know the build-time shard count must pass it
-            top = shard_graph.select(F.max("shard")).first()[0]
-            if top is None:
-                raise ValueError("search_sharded: empty shard graph")
-            n_shards = top + 1
-        work = prepare_search_work(shard_graph, base, n_shards,
-                                   vec_id=vec_id, vec_col=vec_col)
-    if routes is not None:
         # prune unrouted shards JVM-side: their rows never cross the
         # Arrow boundary (partition-level skip of dead work)
         routed_union = sorted({int(s) for ss in routes.values()
                                for s in ss})
         work = work.filter(F.col("shard").isin(routed_union))
-
-    blocked = "_qblock" in work.columns
+    bc_q = spark.sparkContext.broadcast(
+        (q_sets, min_pq, max_pq, budget, adaptive, routes))
 
     def search(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         (q_sets_l, min_pq_l, max_pq_l, budget_l, adaptive_l,
          routes_l) = bc_q.value
-        cur = None
-        acc: list[pd.DataFrame] = []
-
-        def flush():
-            if not acc:
-                return None
-            shard_id, block, n_blocks = cur
+        for shard, rows in _shard_runs(it):
             sel = [qs for qs in q_sets_l
-                   if (routes_l is None
-                       or shard_id in routes_l.get(qs[0], ()))
-                   and qs[0] % n_blocks == block]
+                   if routes_l is None or shard in routes_l.get(qs[0], ())]
             if not sel:
-                return None
-            pdf = acc[0] if len(acc) == 1 else pd.concat(acc)
-            # vectorized shard assembly (guide §4.2 — the old per-row
-            # append/dict loop was the dominant per-task cost once the
-            # fan-out widened): rows arrive sorted by src, so the
-            # global->local id map is one searchsorted over the flat
-            # neighbor buffer.
-            src = pdf["src"].to_numpy(dtype=np.int64)
-            order = (np.arange(len(src))
-                     if bool(np.all(src[1:] >= src[:-1]))
-                     else np.argsort(src, kind="stable"))
-            ids = src[order]
-            vecs = np.vstack(pdf["v"].to_numpy()[order]).astype(
-                np.float64)
-            nb_rows = pdf["nbrs"].to_numpy()[order]
-            lens = np.fromiter((len(nb) for nb in nb_rows),
-                               dtype=np.int64, count=len(nb_rows))
-            flat = (np.concatenate(
-                [np.asarray(nb, dtype=np.int64) for nb in nb_rows])
-                if lens.sum() else np.empty(0, dtype=np.int64))
-            loc = np.searchsorted(ids, flat)
-            bad = ((loc >= len(ids))
-                   | (ids[np.minimum(loc, len(ids) - 1)] != flat))
-            if bad.any():
-                raise ValueError(
-                    f"shard graph references vec_id "
-                    f"{int(flat[np.flatnonzero(bad)[0]])} missing from "
-                    "the vector join — was search_sharded called with "
-                    "the same n_shards/shard assignment the graph was "
-                    "built with?")
-            offs = np.zeros(len(lens) + 1, dtype=np.int64)
-            np.cumsum(lens, out=offs[1:])
-            adj = [loc[offs[i]:offs[i + 1]] for i in range(len(lens))]
-            eps = np.flatnonzero(
-                pdf["is_entry"].to_numpy()[order].astype(np.int64))
-            ep = int(eps[0]) if len(eps) else 0
-            # every routed query set searches this shard in one
-            # wave-vectorized pass (exact twin of the per-set loop,
-            # pinned by tests)
-            all_res = core.batch_multivector_search(
-                adj, vecs, [qmat for _, qmat in sel], ep,
-                min_pq_l, max_pq_l, budget_l, adaptive_l)
-            return _cand_frame([qsid for qsid, _ in sel], all_res, ids)
-
-        for pdf in it:
-            if not len(pdf):
                 continue
-            sh = pdf["shard"].to_numpy()
-            qb = (pdf["_qblock"].to_numpy() if blocked
-                  else np.zeros(len(pdf), dtype=np.int64))
-            nqb = (pdf["_qblocks"].to_numpy() if blocked
-                   else np.ones(len(pdf), dtype=np.int64))
-            change = np.flatnonzero((sh[1:] != sh[:-1])
-                                    | (qb[1:] != qb[:-1])) + 1
-            bounds = [0, *change.tolist(), len(pdf)]
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                key = (int(sh[s]), int(qb[s]), int(nqb[s]))
-                if cur is not None and key != cur:
-                    out = flush()
-                    acc = []
-                    if out is not None:
-                        yield out
-                cur = key
-                acc.append(pdf.iloc[s:e])
-        out = flush()
-        if out is not None:
-            yield out
+            nbrs = rows["nbrs"].to_numpy()
+            offs = np.zeros(len(nbrs) + 1, dtype=np.int64)
+            np.cumsum([len(nb) for nb in nbrs], out=offs[1:])
+            out = _search_shard(
+                _assemble_shard(
+                    shard, rows["src"].to_numpy(dtype=np.int64),
+                    _matrix(rows["v"]), offs,
+                    np.concatenate(nbrs).astype(np.int64),
+                    rows["is_entry"].to_numpy()),
+                sel, min_pq_l, max_pq_l, budget_l, adaptive_l)
+            if out is not None:
+                yield out
 
     partials = work.mapInPandas(search, schema=_CAND_SCHEMA)
     # global partial+final top-k: keep each member's best `max_pq`
@@ -573,17 +484,6 @@ def persist_search_work(work: DataFrame, path: str) -> None:
      .write.mode("overwrite").partitionBy("shard").parquet(path))
 
 
-#: worker-process cache of decoded shard work tables, keyed by
-#: (path, shard, fingerprint-of-files). Spark reuses Python worker
-#: processes within a session (spark.python.worker.reuse), so a
-#: build-once/search-many caller pays the parquet decode once per
-#: (worker, shard) instead of once per search batch. LRU by access
-#: (dict insertion order + move-to-end on hit) and bounded by DECODED
-#: BYTES, not entry count — 8 big shards occupy far more RAM than 8
-#: small ones, and a worker serving many shards across repeated
-#: batches must not evict its hottest shard just because it was
-#: loaded first. The file fingerprint (names+sizes+mtimes)
-#: invalidates stale entries when the index is rewritten in place.
 def _stable_top_cells(affinity: np.ndarray, k: int) -> np.ndarray:
     """Row-wise top-``k`` cell indices by (descending affinity,
     ascending cell index) — bit-identical to
@@ -608,6 +508,17 @@ def _stable_top_cells(affinity: np.ndarray, k: int) -> np.ndarray:
     return out
 
 
+#: worker-process cache of decoded shard work tables, keyed by
+#: (path, shard, fingerprint-of-files). Spark reuses Python worker
+#: processes within a session (spark.python.worker.reuse), so a
+#: build-once/search-many caller pays the parquet decode once per
+#: (worker, shard) instead of once per search batch. LRU by access
+#: (dict insertion order + move-to-end on hit) and bounded by DECODED
+#: BYTES, not entry count — 8 big shards occupy far more RAM than 8
+#: small ones, and a worker serving many shards across repeated
+#: batches must not evict its hottest shard just because it was
+#: loaded first. The file fingerprint (names+sizes+mtimes)
+#: invalidates stale entries when the index is rewritten in place.
 _SHARD_WORK_CACHE: dict = {}
 _SHARD_WORK_CACHE_MAX_BYTES = 512 << 20
 
@@ -647,20 +558,15 @@ def _dir_fingerprint(part: str):
         return None
 
 
-def _load_shard_work(path: str, shard_id: int,
-                     use_cache: bool = True):
+def _load_shard_work(path: str, shard_id: int):
     """(ids, adj, vecs, ep) for one shard from the persisted work table;
-    None when the shard has no partition (empty spatial cell).
-    ``use_cache=False`` bypasses the per-worker decoded-shard cache —
-    for measuring the cold decode cost (SPATIAL_PROBE qpart sections),
-    not for production use."""
+    None when the shard has no partition (empty spatial cell)."""
     import os
 
     import pyarrow.parquet as pq
 
     part = os.path.join(path, f"shard={int(shard_id)}")
-    fp = (_dir_fingerprint(part)
-          if use_cache and "://" not in path else None)
+    fp = _dir_fingerprint(part) if "://" not in path else None
     key = (path, int(shard_id), fp)
     if fp is not None and key in _SHARD_WORK_CACHE:
         hit = _SHARD_WORK_CACHE.pop(key)   # re-insert on hit -> LRU
@@ -672,34 +578,18 @@ def _load_shard_work(path: str, shard_id: int,
         # empty spatial cell — no partition written (works for remote
         # URIs too, where an isdir probe would not)
         return None
-    src = np.asarray(t.column("src"), dtype=np.int64)
-    order = np.argsort(src, kind="stable")
-    ids = src[order]
     # Arrow-native conversions: the list columns come out as one
     # contiguous values buffer + offsets (a to_pylist here costs ~1s
     # per 15k-row shard at dim 64 — measured as the dominant term of
     # the first 1M qpart probe)
     vcol = t.column("v").combine_chunks()
-    vecs = np.asarray(vcol.values, dtype=np.float64) \
-        .reshape(len(vcol), -1)[order]
     ncol = t.column("nbrs").combine_chunks()
-    noff = ncol.offsets.to_numpy().astype(np.int64)
-    nvals = np.asarray(ncol.values, dtype=np.int64)
-    is_entry = np.asarray(t.column("is_entry"), dtype=np.int64)[order]
-    # global vec_id -> local index via searchsorted on the sorted ids
-    loc = np.searchsorted(ids, nvals)
-    bad = (loc >= len(ids)) | (ids[np.minimum(loc, len(ids) - 1)]
-                               != nvals)
-    if bad.any():
-        raise ValueError(
-            f"shard {shard_id} graph references vec_id "
-            f"{int(nvals[np.flatnonzero(bad)[0]])} missing from its "
-            "own partition — was persist_search_work given a "
-            "consistent work table?")
-    adj = [loc[noff[int(o)]:noff[int(o) + 1]] for o in order]
-    eps = np.flatnonzero(is_entry)
-    ep = int(eps[0]) if len(eps) else 0
-    out = (ids, adj, vecs, ep)
+    out = _assemble_shard(
+        int(shard_id), np.asarray(t.column("src"), dtype=np.int64),
+        np.asarray(vcol.values, dtype=np.float64).reshape(len(vcol), -1),
+        ncol.offsets.to_numpy().astype(np.int64),
+        np.asarray(ncol.values, dtype=np.int64),
+        np.asarray(t.column("is_entry")))
     if fp is not None:
         _shard_work_cache_put(key, out)
     return out
@@ -710,8 +600,7 @@ def search_sharded_query_partitioned(
         nprobe: int, min_pq: int, max_pq: int, budget: int,
         adaptive: bool = True, set_id: str = "set_id",
         vec_id: str = "vec_id", vec_col: str = "vec",
-        cell_to_shards: dict[int, tuple] | None = None,
-        use_worker_cache: bool = True) -> DataFrame:
+        cell_to_shards: dict[int, tuple] | None = None) -> DataFrame:
     """Routed sharded search with the query side a DataFrame
     END-TO-END — the batch-scale variant of ``search_sharded``.
 
@@ -805,36 +694,18 @@ def search_sharded_query_partitioned(
     routed = grouped.withColumn(
         "shard", F.explode(_routed_shards(F.col("flat"), F.col("m"))))
 
-    def run_shard(shard_id: int, sel: list):
-        loaded = _load_shard_work(work_path, shard_id,
-                                  use_cache=use_worker_cache)
-        if loaded is None:                       # empty spatial cell
-            return None
-        ids, adj, vecs, ep = loaded
-        all_res = core.batch_multivector_search(
-            adj, vecs, [qmat for _, qmat in sel], ep,
-            min_pq, max_pq, budget, adaptive)
-        return _cand_frame([qsid for qsid, _ in sel], all_res, ids)
-
     def search(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one shard per partition (bijective layout below); stream and
-        # group defensively anyway — the pattern every sharded stage
-        # here uses
-        cur, sel = None, []
-        for pdf in it:
-            for shard, qsid, flat, m in zip(pdf["shard"], pdf["qsid"],
-                                            pdf["flat"], pdf["m"]):
-                if cur is not None and shard != cur:
-                    out = run_shard(int(cur), sel)
-                    if out is not None:
-                        yield out
-                    sel = []
-                cur = shard
-                sel.append((int(qsid),
-                            np.asarray(flat, dtype=np.float64)
-                            .reshape(int(m), -1)))
-        if sel:
-            out = run_shard(int(cur), sel)
+        # one shard per partition (bijective layout below)
+        for shard, rows in _shard_runs(it):
+            loaded = _load_shard_work(work_path, shard)
+            if loaded is None:                   # empty spatial cell
+                continue
+            sel = [(int(qsid), np.asarray(flat, dtype=np.float64)
+                    .reshape(int(m), -1))
+                   for qsid, flat, m in zip(rows["qsid"], rows["flat"],
+                                            rows["m"])]
+            out = _search_shard(loaded, sel, min_pq, max_pq, budget,
+                                adaptive)
             if out is not None:
                 yield out
 

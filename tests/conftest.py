@@ -1,6 +1,9 @@
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# test this checkout's library, wherever the checkout lives
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 import numpy as np
 import pytest

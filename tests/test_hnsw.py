@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from cross_modal_multivector_search_spark import testdata as TD
 from cross_modal_multivector_search_spark.operators import (
-    hnsw, recall, rerank, set_search,
+    hnsw, recall, rerank, set_search, sharded,
 )
 
 from conftest import SF_SMOKE, assert_same_ranking, is_in_task
@@ -229,7 +229,7 @@ def test_sharded_search_saturating_is_exact(spark):
     g = hnsw.build_hnsw_sharded(v.select("vec_id", "vec"), 4,
                                 hnsw.HnswParams(m=8, ef_construction=30,
                                                 seed=2))
-    work = hnsw.prepare_hnsw_work(g, v.select("vec_id", "vec"), 4).cache()
+    work = sharded.prepare_search_work(g, v.select("vec_id", "vec"), 4).cache()
     cands = hnsw.search_hnsw_sharded(work, q, budget=TD.M_FIXED * n)
     out = rerank.rerank(cands.select("query_set_id", "base_vec_id"),
                         q, v, 10, m=TD.M_FIXED)
@@ -261,7 +261,7 @@ def test_sharded_search_varcard_budget_parity(spark):
     p = hnsw.HnswParams(m=8, ef_construction=30, seed=2)
     budget = 24                                 # ef: 12 (m=2) / 4 (m=6)
     g = hnsw.build_hnsw_sharded(base, 2, p)
-    work = hnsw.prepare_hnsw_work(g, base, 2).cache()
+    work = sharded.prepare_search_work(g, base, 2).cache()
     got = hnsw.search_hnsw_sharded(work, q, budget=budget)
     counts = {(r["query_set_id"], r["member_pos"]): r["count"]
               for r in got.groupBy("query_set_id", "member_pos")

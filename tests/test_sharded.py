@@ -75,9 +75,10 @@ def test_sharded_search_recall(spark, shard_graph):
     queries = vecs.filter(F.col("set_id") < 10)
     gt = set_search.set_topk_sql(queries, vecs, 10).select(
         "query_set_id", "data_set_id")
+    work = sharded.prepare_search_work(
+        shard_graph, vecs.select("vec_id", "vec"), N_SHARDS)
     cands = sharded.search_sharded(
-        shard_graph, vecs.select("vec_id", "vec"), queries,
-        min_pq=5, max_pq=100, budget=100, n_shards=N_SHARDS)
+        work, queries, min_pq=5, max_pq=100, budget=100)
     out = rerank.rerank(cands.select("query_set_id", "base_vec_id"),
                         queries, vecs, 10, m=TD.M_FIXED)
     mr = recall.mean_recall(
@@ -91,11 +92,12 @@ def test_search_sharded_prefetched_queries_equivalent(spark, shard_graph):
     returns the same candidate rows as the DataFrame form."""
     vecs = TD.embeddings_norm(spark, SF_SMOKE)
     queries = vecs.filter(F.col("set_id") < 10)
-    base = vecs.select("vec_id", "vec")
-    kw = dict(min_pq=5, max_pq=100, budget=100, n_shards=N_SHARDS)
-    a = sharded.search_sharded(shard_graph, base, queries, **kw)
+    work = sharded.prepare_search_work(
+        shard_graph, vecs.select("vec_id", "vec"), N_SHARDS)
+    kw = dict(min_pq=5, max_pq=100, budget=100)
+    a = sharded.search_sharded(work, queries, **kw)
     b = sharded.search_sharded(
-        shard_graph, base, set_search.fetch_grouped_sets(queries), **kw)
+        work, set_search.fetch_grouped_sets(queries), **kw)
     ra = sorted(tuple(r) for r in a.collect())
     rb = sorted(tuple(r) for r in b.collect())
     assert ra and ra == rb
@@ -208,13 +210,10 @@ def test_routed_all_shards_equals_unrouted(spark, clustered_corpus):
     v, book, sb, g, work = clustered_corpus
     q = v.filter(F.col("set_id") < 5)
     routes = sharded.route_query_sets(q, book, nprobe=N_SHARDS)
-    full = sharded.search_sharded(None, sb.select("vec_id", "vec"), q,
-                                  min_pq=5, max_pq=50, budget=50,
-                                  n_shards=N_SHARDS, work=work)
-    routed = sharded.search_sharded(None, sb.select("vec_id", "vec"), q,
-                                    min_pq=5, max_pq=50, budget=50,
-                                    n_shards=N_SHARDS, work=work,
-                                    routes=routes)
+    full = sharded.search_sharded(work, q, min_pq=5, max_pq=50,
+                                  budget=50)
+    routed = sharded.search_sharded(work, q, min_pq=5, max_pq=50,
+                                    budget=50, routes=routes)
     key = ["query_set_id", "member_pos", "base_vec_id", "dist"]
     assert sorted(map(tuple, full.select(key).collect())) \
         == sorted(map(tuple, routed.select(key).collect()))
@@ -232,10 +231,8 @@ def test_routed_nprobe1_matches_exact_on_separated_clusters(
     q = v.filter(F.col("set_id") < 5)
     routes = sharded.route_query_sets(q, book, nprobe=1)
     assert all(len(s) == 1 for s in routes.values())
-    cands = sharded.search_sharded(None, sb.select("vec_id", "vec"), q,
-                                   min_pq=5, max_pq=100, budget=400,
-                                   n_shards=N_SHARDS, work=work,
-                                   routes=routes)
+    cands = sharded.search_sharded(work, q, min_pq=5, max_pq=100,
+                                   budget=400, routes=routes)
     res = rerank.rerank(cands.select("query_set_id", "base_vec_id"),
                         q, v, 5, m=5)
     gt = set_search.set_topk_gemm(q, v, 5).select(
@@ -298,12 +295,9 @@ def test_balanced_spatial_shards(spark, clustered_corpus):
     routes = sharded.route_query_sets(q, book, nprobe=N_SHARDS,
                                       cell_to_shards=c2s)
     assert all(len(s) == tot for s in routes.values())
-    full = sharded.search_sharded(None, bal.select("vec_id", "vec"), q,
-                                  min_pq=5, max_pq=50, budget=50,
-                                  n_shards=tot, work=wb)
-    routed = sharded.search_sharded(None, bal.select("vec_id", "vec"), q,
-                                    min_pq=5, max_pq=50, budget=50,
-                                    n_shards=tot, work=wb, routes=routes)
+    full = sharded.search_sharded(wb, q, min_pq=5, max_pq=50, budget=50)
+    routed = sharded.search_sharded(wb, q, min_pq=5, max_pq=50,
+                                    budget=50, routes=routes)
     key = ["query_set_id", "member_pos", "base_vec_id", "dist"]
     assert sorted(map(tuple, full.select(key).collect())) \
         == sorted(map(tuple, routed.select(key).collect()))
@@ -326,23 +320,12 @@ def test_query_partitioned_search_matches_driver_routed(
     for nprobe in (1, 2, N_SHARDS):
         routes = sharded.route_query_sets(q, book, nprobe=nprobe)
         ref = sharded.search_sharded(
-            None, sb.select("vec_id", "vec"), q, min_pq=5, max_pq=50,
-            budget=50, n_shards=N_SHARDS, work=work, routes=routes)
+            work, q, min_pq=5, max_pq=50, budget=50, routes=routes)
         got = sharded.search_sharded_query_partitioned(
             path, q, book, nprobe=nprobe, min_pq=5, max_pq=50,
             budget=50)
         assert sorted(map(tuple, got.select(key).collect())) \
             == sorted(map(tuple, ref.select(key).collect())), nprobe
-    # the cache-bypass measurement path must produce the same rows
-    nocache = sharded.search_sharded_query_partitioned(
-        path, q, book, nprobe=2, min_pq=5, max_pq=50, budget=50,
-        use_worker_cache=False)
-    routes2 = sharded.route_query_sets(q, book, nprobe=2)
-    ref2 = sharded.search_sharded(
-        None, sb.select("vec_id", "vec"), q, min_pq=5, max_pq=50,
-        budget=50, n_shards=N_SHARDS, work=work, routes=routes2)
-    assert sorted(map(tuple, nocache.select(key).collect())) \
-        == sorted(map(tuple, ref2.select(key).collect()))
     with pytest.raises(ValueError, match="nprobe"):
         sharded.search_sharded_query_partitioned(
             path, q, book, nprobe=0, min_pq=5, max_pq=50, budget=50)
@@ -369,8 +352,7 @@ def test_query_partitioned_search_balanced_cells(
     routes = sharded.route_query_sets(q, book, nprobe=2,
                                       cell_to_shards=c2s)
     ref = sharded.search_sharded(
-        None, bal.select("vec_id", "vec"), q, min_pq=5, max_pq=50,
-        budget=50, n_shards=tot, work=wb, routes=routes)
+        wb, q, min_pq=5, max_pq=50, budget=50, routes=routes)
     got = sharded.search_sharded_query_partitioned(
         path, q, book, nprobe=2, min_pq=5, max_pq=50, budget=50,
         cell_to_shards=c2s)
@@ -473,46 +455,72 @@ def test_stable_top_cells_matches_stable_argsort():
         np.argsort(-small, axis=1, kind="stable")[:, :5])
 
 
-def test_query_blocked_fanout_matches_unblocked(spark, shard_graph):
-    """query_blocks > 1 (shard x block sub-partitions, r16) must emit
-    the same candidate multiset as the unblocked layout — every set
-    still meets every shard exactly once, only the fan-out widens —
-    and the blocked work layout must carry one (shard, block) pair per
-    partition."""
-    vecs = TD.embeddings_norm(spark, SF_SMOKE)
-    queries = vecs.filter(F.col("set_id") < 10)
-    base = vecs.select("vec_id", "vec")
-    w1 = sharded.prepare_search_work(shard_graph, base, N_SHARDS)
-    w3 = sharded.prepare_search_work(shard_graph, base, N_SHARDS,
-                                     query_blocks=3)
-    assert w3.rdd.getNumPartitions() == N_SHARDS * 3
-    pairs = (w3.select("shard", "_qblock").distinct().collect())
-    assert len(pairs) == N_SHARDS * 3
-    a = sharded.search_sharded(
-        None, base, queries, min_pq=5, max_pq=100, budget=100,
-        n_shards=N_SHARDS, work=w1)
-    b = sharded.search_sharded(
-        None, base, queries, min_pq=5, max_pq=100, budget=100,
-        n_shards=N_SHARDS, work=w3)
-    key = ["query_set_id", "member_pos", "base_vec_id"]
-    ra = sorted(tuple(r) for r in a.select(*key).collect())
-    rb = sorted(tuple(r) for r in b.select(*key).collect())
-    assert ra == rb
-
-
-def test_query_blocked_hnsw_fanout_matches_unblocked(spark):
+def test_shards_spanning_arrow_batches_give_same_rows(spark, shard_graph):
+    """Every sharded stage groups its rows into shards across the Arrow
+    batches of a partition. At 7 rows per batch each ~125-row shard
+    spans many batches; builds and searches must give the same rows as
+    at the default batch size, where a shard fits one batch."""
     from cross_modal_multivector_search_spark.operators import hnsw
+
     vecs = TD.embeddings_norm(spark, SF_SMOKE)
-    queries = vecs.filter(F.col("set_id") < 10)
     base = vecs.select("vec_id", "vec")
-    g = hnsw.build_hnsw_sharded(
-        base, N_SHARDS, hnsw.HnswParams(m=8, ef_construction=40, seed=3))
-    g = g.cache(); g.count()
-    w1 = hnsw.prepare_hnsw_work(g, base, N_SHARDS)
-    w3 = hnsw.prepare_hnsw_work(g, base, N_SHARDS, query_blocks=3)
-    a = hnsw.search_hnsw_sharded(w1, queries, budget=100)
-    b = hnsw.search_hnsw_sharded(w3, queries, budget=100)
-    key = ["query_set_id", "member_pos", "base_vec_id"]
-    ra = sorted(tuple(r) for r in a.select(*key).collect())
-    rb = sorted(tuple(r) for r in b.select(*key).collect())
-    assert ra == rb
+    q = vecs.filter(F.col("set_id") < 6)
+    p = graph_build.RoarGraphParams(m_sq=20, m_pjbp=12, l_pjpq=40)
+    routes = {qsid: frozenset({qsid % N_SHARDS, (qsid + 1) % N_SHARDS})
+              for qsid, _ in set_search.fetch_grouped_sets(q)}
+    hp = hnsw.HnswParams(m=8, ef_construction=30, seed=2)
+
+    def run():
+        work = sharded.prepare_search_work(shard_graph, base, N_SHARDS)
+        hg = hnsw.build_hnsw_sharded(base, N_SHARDS, hp)
+        outs = [
+            sharded.shard_self_knn(base, N_SHARDS, 5),
+            sharded.build_sharded(base, N_SHARDS, p),
+            sharded.build_sharded(
+                base, N_SHARDS, p,
+                train_knn=sharded.shard_self_knn(base, N_SHARDS, p.m_sq)),
+            sharded.search_sharded(work, q, min_pq=5, max_pq=50,
+                                   budget=50),
+            sharded.search_sharded(work, q, min_pq=5, max_pq=50,
+                                   budget=50, routes=routes),
+            hg,
+            hnsw.search_hnsw_sharded(
+                sharded.prepare_search_work(hg, base, N_SHARDS), q,
+                budget=100),
+        ]
+        return [sorted(map(str, df.collect())) for df in outs]
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    want = run()
+    try:
+        spark.conf.set(conf, "7")
+        got = run()
+    finally:
+        spark.conf.set(conf, saved)
+    for i, (g, w) in enumerate(zip(got, want)):
+        assert g and g == w, i
+
+
+def test_missing_neighbour_fails_the_same_on_both_paths(
+        spark, clustered_corpus, tmp_path):
+    """A work table whose graph names a vec_id absent from its shard
+    fails with the shard assembler's error, both in the broadcast
+    search and after a persist -> query-partitioned round trip."""
+    v, book, sb, g, work = clustered_corpus
+    victim = work.select("src").first()["src"]
+    bad = work.withColumn(
+        "nbrs", F.when(F.col("src") == victim,
+                       F.array(F.lit(10 ** 9).cast("long")))
+        .otherwise(F.col("nbrs")))
+    q = v.filter(F.col("set_id") < 2)
+    msg = r"ValueError: shard \d+ graph references vec_id 1000000000"
+    with pytest.raises(Exception, match=msg):
+        sharded.search_sharded(bad, q, min_pq=5, max_pq=10,
+                               budget=10).collect()
+    path = str(tmp_path / "bad_work")
+    sharded.persist_search_work(bad, path)
+    with pytest.raises(Exception, match=msg):
+        sharded.search_sharded_query_partitioned(
+            path, q, book, nprobe=N_SHARDS, min_pq=5, max_pq=10,
+            budget=10).collect()

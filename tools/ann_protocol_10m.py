@@ -140,9 +140,8 @@ def main() -> None:
         routes = sharded.route_query_sets(members, book, nprobe)
         t0 = time.time()
         cands = sharded.search_sharded(
-            None, sb.select("vec_id", "vec"), members, min_pq=5,
-            max_pq=budget, budget=budget, n_shards=n_shards,
-            work=work, routes=routes).cache()
+            work, members, min_pq=5, max_pq=budget, budget=budget,
+            routes=routes).cache()
         cands.count()
         t_search = time.time() - t0
         t0 = time.time()

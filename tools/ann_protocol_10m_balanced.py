@@ -148,9 +148,8 @@ def main() -> None:
                                           cell_to_shards=c2s)
         t0 = time.time()
         cands = sharded.search_sharded(
-            None, bal.select("vec_id", "vec"), members, min_pq=5,
-            max_pq=budget, budget=budget, n_shards=tot,
-            work=work, routes=routes).cache()
+            work, members, min_pq=5, max_pq=budget, budget=budget,
+            routes=routes).cache()
         cands.count()
         t_search = time.time() - t0
         t0 = time.time()

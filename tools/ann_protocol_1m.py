@@ -82,9 +82,7 @@ def main() -> None:
     for budget in BUDGETS:
         t0 = time.time()
         cands = sharded.search_sharded(
-            None, v.select("vec_id", "vec"), qsets, min_pq=5,
-            max_pq=budget, budget=budget, n_shards=n_shards,
-            work=work).cache()
+            work, qsets, min_pq=5, max_pq=budget, budget=budget).cache()
         cands.count()
         t_search = time.time() - t0
         t0 = time.time()

@@ -104,8 +104,7 @@ def main() -> None:
         for budget in (100, 400, 1000):
             t0 = time.time()
             cands = sharded.search_sharded(
-                None, v.select("vec_id", "vec"), qsets, min_pq=5,
-                max_pq=budget, budget=budget, n_shards=n_shards, work=work)
+                work, qsets, min_pq=5, max_pq=budget, budget=budget)
             res = rerank.rerank(cands.select("query_set_id",
                                              "base_vec_id"),
                                 qsets, v, 10, m=5)

@@ -120,9 +120,8 @@ def main() -> None:
                   sharded.route_query_sets(members, book, nprobe))
         t0 = time.time()
         cands = sharded.search_sharded(
-            None, sb.select("vec_id", "vec"), members, min_pq=5,
-            max_pq=budget, budget=budget, n_shards=n_shards,
-            work=work, routes=routes)
+            work, members, min_pq=5, max_pq=budget, budget=budget,
+            routes=routes)
         res = rerank.rerank(cands.select("query_set_id", "base_vec_id"),
                             members, v, 10, m=5).cache()
         res.count()
